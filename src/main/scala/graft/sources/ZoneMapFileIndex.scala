@@ -66,7 +66,7 @@ class ZoneMapFileIndex(spark: SparkSession, ops: VersionedTableOps,
   // the version's bloom declaration, resolved once like the statuses;
   // probed only when an equality conjunct names a declared column
   private lazy val bloomDecl: Set[String] =
-    ops.manifestBloomBy(table, version).map(_._1).toSet
+    ops.manifest(table, version).bloomBy.map(_._1).toSet
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {

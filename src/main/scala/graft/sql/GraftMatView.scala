@@ -381,12 +381,11 @@ object GraftMatView {
       sources: Seq[String] = Nil, chainKeys: Seq[Seq[String]] = Nil,
       exprSums: Seq[(String, String)] = Nil, declared: Seq[String] = Nil)
 
-  // Real JSON (round-11 advice): Jackson ships with Spark, and the
-  // WHERE predicate is arbitrary SQL text — newlines, brackets,
-  // quotes — that hand-rolled field regexes parsed only by accident
-  // of field ordering. Round-11 files (no "kind" field) read back
-  // with kind = "agg", their only flavor.
-  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+  // Real JSON through the commit log's shared mapper: the WHERE
+  // predicate is arbitrary SQL text — newlines, brackets, quotes.
+  // Files without a "kind" field read back with kind = "agg", their
+  // only flavor.
+  private val json = graft.sources.ManifestCodec.mapper
 
   private def defPath(view: String) = Paths.get(view, "_mv.json")
 

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.sources.{InMemoryCommitStore, VersionedTable, VersionedTableOps}
+import graft.sources.{CatDelete, InMemoryCommitStore, VersionedTable, VersionedTableOps}
 
 /** Per-file bloom-filter file skipping (SURVEY §2.7): equality
   * lookups on a HIGH-CARDINALITY, UNCLUSTERED column — the query the
@@ -226,6 +226,26 @@ abstract class BloomIndexBattery(backend: String, ops: VersionedTableOps)
     assert(tot >= 4, "value-routed leaves hold multiple files")
     assert(kept.size < tot, s"leaf sidecars prune (kept ${kept.size}/$tot)")
     assert(ops.readPoints(spark, t, "k", Seq(1235L)).count() === 1)
+  }
+
+  test(s"[$backend] the declaration survives catalog commits and shallow clones") {
+    val t = fresh("carry")
+    scattered(t)
+    ops.setBloomIndex(spark, t, Seq(("k", 0.001)))
+    val declared = ops.bloomIndexSpec(t)
+    assert(declared === Seq(("k", 0.001)))
+    val cat = fresh("carry-cat")
+    ops.appendAll(spark, cat, Seq(t -> spark.range(5000, 5010)
+      .select(col("id").as("k"), concat(lit("key-"), col("id").cast("string")).as("s"))))
+    assert(ops.bloomIndexSpec(t) === declared, "a catalog append keeps the declaration")
+    ops.commitAll(spark, cat, Seq(CatDelete(t, col("k") === 5000L)))
+    assert(ops.bloomIndexSpec(t) === declared, "a catalog delete keeps the declaration")
+    val c = fresh("carry-clone")
+    ops.cloneTable(spark, t, c)
+    assert(ops.bloomIndexSpec(c) === declared, "a shallow clone inherits the declaration")
+    assert(ops.bloomIndexSpec(t) === declared)
+    val (kept, tot) = ops.filesForPoints(c, "k", Seq(1234L))
+    assert(kept.size < tot, s"the clone's blooms still prune (kept ${kept.size}/$tot)")
   }
 
   test(s"[$backend] refusals: unknown column, bad fpp, undeclared probe, unsafe name") {

@@ -280,6 +280,9 @@ class LakehouseSpec extends SparkSpec {
     VersionedTable.overwrite(spark, t, mk(0, 100, "a\\quote\"-"))
     VersionedTable.append(spark, t, mk(100, 200, "m-"))
     VersionedTable.append(spark, t, mk(200, 300, "z-"))
+    val unbraced = VersionedTable.snapshotFiles(t).toSet
+    VersionedTable.append(spark, t, mk(300, 400, "{brace}-"))
+    val braced = VersionedTable.snapshotFiles(t).filterNot(unbraced).toSet
     val (kept, total) = VersionedTable.filesForRangeString(t, "s", "m", "m~")
     assert(kept.nonEmpty && kept.size < total,
       s"escaped string stats must still parse and skip (kept ${kept.size}/$total)")
@@ -287,6 +290,10 @@ class LakehouseSpec extends SparkSpec {
     assert(got.count() === 100)
     // the backslash/quote cluster is intact and probeable too
     assert(VersionedTable.readRangeString(spark, t, "s", "a", "a~").count() === 100)
+    // brace-holding values carry bounds too: probes skip or keep them exactly
+    assert(kept.toSet.intersect(braced).isEmpty, "a disjoint probe skips the brace files")
+    assert(VersionedTable.filesForRangeString(t, "s", "{", "{~")._1.toSet === braced)
+    assert(VersionedTable.readRangeString(spark, t, "s", "{", "{~").count() === 100)
   }
 
   test("readIndexed: a plain .filter() skips files inside Catalyst planning") {

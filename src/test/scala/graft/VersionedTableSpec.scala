@@ -1587,6 +1587,11 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
         s"""  "files": [\n  ]\n}\n""")
     val e = intercept[IllegalArgumentException] { ops.read(spark, t).count() }
     assert(e.getMessage.contains("format 99"), e.getMessage)
+    // metadata accessors refuse too, rather than answer "none"
+    Seq(() => ops.checkConstraints(t), () => ops.partitionSpec(t)).foreach { f =>
+      val m = intercept[IllegalArgumentException](f()).getMessage
+      assert(m.contains("format 99"), m)
+    }
     // pinned reads of the OLD version still work
     assert(ops.read(spark, t, Some(1L)).count() === base.count())
   }
