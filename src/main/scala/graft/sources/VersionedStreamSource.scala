@@ -54,12 +54,7 @@ class VersionedStreamProvider extends StreamSourceProvider with DataSourceRegist
   override def sourceSchema(sqlContext: SQLContext, schema: Option[StructType],
       providerName: String, parameters: Map[String, String]): (String, StructType) = {
     val t = tableDir(parameters)
-    val s = schema.getOrElse {
-      val vs = VersionedTable.versions(t)
-      require(vs.nonEmpty,
-        s"no commits at $t and no user schema: cannot infer a stream schema")
-      VersionedTable.read(sqlContext.sparkSession, t, Some(vs.last)).schema
-    }
+    val s = schema.getOrElse(VersionedTable.read(sqlContext.sparkSession, t).schema)
     (s"graft-versioned:$t", s)
   }
 
@@ -154,9 +149,7 @@ class CatalogStreamProvider extends StreamSourceProvider with DataSourceRegister
     val merged = scala.collection.mutable.LinkedHashMap
       .empty[String, org.apache.spark.sql.types.StructField]
     tables.foreach { t =>
-      val vs = ops.versions(t)
-      require(vs.nonEmpty, s"catalog member $t has no commits")
-      ops.read(spark, t, Some(vs.last)).schema.fields.foreach { f =>
+      ops.read(spark, t).schema.fields.foreach { f =>
         merged.get(f.name) match {
           case Some(prev) => require(prev.dataType == f.dataType,
             s"member schemas conflict on '${f.name}': " +
@@ -206,8 +199,7 @@ class CatalogStreamSource(sqlContext: SQLContext, ops: VersionedTableOps,
   private lazy val memberSchemas: Map[String, StructType] = {
     val spark = sqlContext.sparkSession
     tables.map { t =>
-      val names = ops.read(spark, t,
-        Some(ops.versions(t).last)).schema.fieldNames.toSet
+      val names = ops.read(spark, t).schema.fieldNames.toSet
       t -> StructType(schema.fields.filter(f => names.contains(f.name)))
     }.toMap
   }

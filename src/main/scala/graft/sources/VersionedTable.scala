@@ -37,10 +37,10 @@ import org.apache.spark.sql.functions._
   *    the manifest IS the version.
   *  - OPTIMISTIC CONCURRENCY: the publish fails if the target version
   *    exists (two writers raced); the loser re-reads the log and
-  *    REBUILDS ITS FILE LIST against the new head (commit takes a
-  *    base-version → files closure, so a retried append re-includes
-  *    the concurrent append's files instead of republishing a stale
-  *    list) before retrying. No locks.
+  *    REBUILDS ITS MANIFEST against the new head (commit takes a
+  *    `Manifest => Manifest` plan over the decoded base, so a retried
+  *    append re-includes the concurrent append's files instead of
+  *    republishing a stale list) before retrying. No locks.
   *
   * Scale notes: the manifest lists files, so the driver-side work is
   * O(files-per-snapshot) — the same planner cost any parquet read
@@ -77,7 +77,32 @@ class VersionedTableOps(val store: CommitStore) {
     ManifestCodec.decodeManifest(store.read(commitsDir(table), manifestName(v)),
       s"manifest v$v of $table")
 
-  /** The head manifest; an empty one (version 0) before the first commit. */
+  /** THE snapshot resolver: `version` of `table` (the head when None),
+    * decoded once. Lists `_commits` only when no version is given;
+    * refuses an empty table and a vacuumed or never-committed version.
+    *
+    * Contract: every public table operation resolves its snapshot
+    * here (or, for writers, through [[headManifest]] / the commit
+    * plan's base) exactly once and passes the decoded Manifest down —
+    * private helpers never take `(table, version)`, so one operation
+    * can never mix two versions' files, deletion vectors or metadata.
+    */
+  private[graft] def snapshot(table: String, version: Option[Long] = None): Manifest = {
+    val v = version.getOrElse {
+      val vs = versions(table)
+      require(vs.nonEmpty, s"no commits at $table")
+      vs.last
+    }
+    try manifest(table, v)
+    catch { case _: java.nio.file.NoSuchFileException =>
+      throw new IllegalArgumentException(s"version $v of $table was vacuumed or never existed") }
+  }
+
+  /** The head manifest; an empty one (version 0) before the first
+    * commit — the base a writer plans against. A head vacuumed between
+    * the listing and the read surfaces as NoSuchFileException, which
+    * [[commit]] retries against the fresh head.
+    */
   private def headManifest(table: String): Manifest =
     versions(table).lastOption.fold(Manifest())(manifest(table, _))
 
@@ -85,22 +110,17 @@ class VersionedTableOps(val store: CommitStore) {
     * order) — empty for unpartitioned tables.
     */
   def partitionSpec(table: String, version: Option[Long] = None): Seq[String] =
-    versions(table).lastOption match {
-      case None => Nil
-      case Some(last) => manifest(table, version.getOrElse(last)).partitionBy
-    }
+    snapshot(table, version).partitionBy
 
   /** The table's bloom-index declaration (see [[setBloomIndex]])
     * under LOGICAL column names; the manifest keys it physical, like
     * the stats.
     */
   def bloomIndexSpec(table: String, version: Option[Long] = None): Seq[(String, Double)] =
-    versions(table).lastOption match {
-      case None => Nil
-      case Some(last) =>
-        val m = manifest(table, version.getOrElse(last))
-        m.bloomBy.map { case (ph, f) => (m.renames.getOrElse(ph, ph), f) }
-    }
+    logicalBlooms(snapshot(table, version))
+
+  private def logicalBlooms(m: Manifest): Seq[(String, Double)] =
+    m.bloomBy.map { case (ph, f) => (m.renames.getOrElse(ph, ph), f) }
 
   /** The table's column-mapping mode: "name" (default — physical file
     * column names are the column's FIRST logical name, rename/drop
@@ -108,11 +128,7 @@ class VersionedTableOps(val store: CommitStore) {
     * names are stable synthetic ids, renames/drops/re-adds are free).
     */
   def columnMapping(table: String, version: Option[Long] = None): String =
-    versions(table).lastOption match {
-      case None => "name"
-      case Some(last) =>
-        if (manifest(table, version.getOrElse(last)).colMap == "id") "id" else "name"
-    }
+    if (snapshot(table, version).colMap == "id") "id" else "name"
 
   /** id-mode physical namespace: live columns are `__gcid_<n>`,
     * retired (dropped) ids re-point their map entry to `__gone_<n>` —
@@ -156,6 +172,14 @@ class VersionedTableOps(val store: CommitStore) {
       s"$IdPhysPrefix${start + i}" -> c }
   }
 
+  /** The layout a pre-staged write of `cols` stages under and commits:
+    * `head` itself in name mode, `head` with its map [[idExtend]]ed in
+    * id mode.
+    */
+  private def idLayout(head: Manifest, cols: Seq[String], retireAbsent: Boolean): Manifest =
+    if (head.colMap != "id") head
+    else head.copy(renames = idExtend(head.renames, cols, retireAbsent))
+
   /** The version's deletion-vector files (relative paths, each a
     * parquet of (file, pos) pairs naming rows the version has DELETED
     * from still-referenced data files; empty when it carries none) —
@@ -164,7 +188,7 @@ class VersionedTableOps(val store: CommitStore) {
     * them.
     */
   def deletionVectors(table: String, version: Option[Long] = None): Seq[String] =
-    manifest(table, version.getOrElse(versions(table).last)).dvs
+    snapshot(table, version).dvs
 
   /** Commit wall-clock of a version, epoch millis — the manifest's
     * `ts`; legacy manifests without it fall back to the store's
@@ -182,13 +206,13 @@ class VersionedTableOps(val store: CommitStore) {
     * result is always a real committed snapshot.
     */
   def versionAsOf(table: String, tsMillis: Long): Long = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no commits at $table")
-    val at = vs.filter(v => commitTimeMs(table, manifest(table, v)) <= tsMillis)
+    val ms = versions(table).map(manifest(table, _))
+    require(ms.nonEmpty, s"no commits at $table")
+    val at = ms.filter(commitTimeMs(table, _) <= tsMillis)
     require(at.nonEmpty,
       s"no version of $table existed at $tsMillis (first commit: " +
-        s"${commitTimeMs(table, manifest(table, vs.head))})")
-    at.last
+        s"${commitTimeMs(table, ms.head)})")
+    at.last.version
   }
 
   /** [[read]] pinned to the snapshot current at `tsMillis`. */
@@ -205,11 +229,9 @@ class VersionedTableOps(val store: CommitStore) {
     * dirs are still referenced and alive by the vacuum contract.
     */
   def restore(spark: SparkSession, table: String, v: Long): Long = {
-    require(store.exists(commitsDir(table), manifestName(v)),
-      s"version $v of $table was vacuumed or never existed")
+    val old = snapshot(table, Some(v))
     commit(table, "restore") { m =>
       requireInit(table, m.version, "restore")
-      val old = manifest(table, v)
       // the undo restores the column-name map too
       m.copy(files = old.files, dvs = old.dvs, renames = old.renames)
         .withSchema(schemaOf(spark, table, old))
@@ -232,7 +254,7 @@ class VersionedTableOps(val store: CommitStore) {
     * commits (restore/clone) by file-list identity.
     */
   def snapshotFiles(table: String, version: Option[Long] = None): Seq[String] =
-    manifest(table, version.getOrElse(versions(table).last)).files
+    snapshot(table, version).files
 
   /** SHALLOW CLONE: initialize `dst` as a zero-copy snapshot of
     * `src` at version `v` (head by default) — the dev/test-branch
@@ -253,15 +275,8 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def cloneTable(spark: SparkSession, src: String, dst: String,
       version: Option[Long] = None): Long = {
-    val v = version.getOrElse {
-      val vs = versions(src)
-      require(vs.nonEmpty, s"no commits at $src")
-      vs.last
-    }
-    require(store.exists(commitsDir(src), manifestName(v)),
-      s"version $v of $src was vacuumed or never existed")
+    val m = snapshot(src, version)
     require(versions(dst).isEmpty, s"clone target $dst already has commits")
-    val m = manifest(src, v)
     (m.files ++ m.dvs).map(f => f.substring(0, f.lastIndexOf('/'))).distinct.foreach { rel =>
       val to = Paths.get(dst, rel)
       Files.createDirectories(to)
@@ -327,24 +342,22 @@ class VersionedTableOps(val store: CommitStore) {
     * reads. Bounds are widened one ULP at write time so a value that
     * rounded on the double conversion can never shrink the interval
     * and wrongly skip a file holding boundary rows.
+    *
+    * `layout` is the manifest whose rename map, partition spec and
+    * bloom declaration the stage follows: the commit plan's base for
+    * in-closure stagers (a retry re-stages against the new base), the
+    * resolved head — its map extended by [[idLayout]] when the write
+    * itself assigns fresh column ids — for pre-staged writers, which
+    * guard a concurrent rename explicitly (requireRenamesUnchanged).
     */
-  private def stageData(table: String, df: DataFrame, tag: String,
-      partsOverride: Option[Seq[String]] = None,
-      renFor: Option[Map[String, String]] = None,
+  private def stageData(table: String, layout: Manifest, df: DataFrame, tag: String,
       partWidthHint: Option[Int] = None): Seq[String] = {
     val rel = s"data/$tag-${java.util.UUID.randomUUID().toString.take(8)}"
     val dir = Paths.get(table, rel)
-    lazy val head = headManifest(table)
     // writes always land under PHYSICAL names so files stay uniform
     // across renames; DV stages carry internal (file, pos) columns and
-    // never translate. In-closure stagers re-run on retry, so a head
-    // moved by a concurrent rename re-resolves; pre-staged ops guard
-    // explicitly (requireRenamesUnchanged). `renFor` supplies the map
-    // explicitly when the WRITE ITSELF extends it (id-mapped tables
-    // assigning fresh column ids) — the commit then records the same
-    // extended map in its manifest.
-    val ren = if (tag == "dv") Map.empty[String, String]
-      else renFor.getOrElse(head.renames)
+    // never translate
+    val ren = if (tag == "dv") Map.empty[String, String] else layout.renames
     val out = ren.foldLeft(df) { case (d, (ph, lo)) =>
       if (d.columns.contains(lo)) d.withColumnRenamed(lo, ph) else d }
     require(out.columns.distinct.length == out.columns.length,
@@ -356,9 +369,7 @@ class VersionedTableOps(val store: CommitStore) {
     // lands value-routed, so the drop-partition invariant (every file
     // carries its partition segments) self-maintains. DV stages carry
     // internal (file, pos) rows and never route.
-    val parts: Seq[String] =
-      if (tag == "dv") Nil
-      else partsOverride.getOrElse(head.partitionBy)
+    val parts: Seq[String] = if (tag == "dv") Nil else layout.partitionBy
     val staged: Seq[String] = if (parts.isEmpty) {
       out.write.parquet(dir.toString)
       val emptyParts = writeFileStats(df.sparkSession, dir)
@@ -427,8 +438,7 @@ class VersionedTableOps(val store: CommitStore) {
     // self-maintains. One distributed job per stage; filters sized to
     // the batch's largest file (exact per-file counts come from the
     // `_stats.json` just written). DV stages never index.
-    val blooms: Seq[(String, Double)] =
-      if (tag == "dv") Nil else head.bloomBy
+    val blooms: Seq[(String, Double)] = if (tag == "dv") Nil else layout.bloomBy
     if (blooms.nonEmpty && staged.nonEmpty)
       BloomSkipIndex.build(df.sparkSession, table, staged, blooms, maxRows(table, staged))
     staged
@@ -647,13 +657,10 @@ class VersionedTableOps(val store: CommitStore) {
     * driver-side footer read each (row counts live in footers).
     */
   def rowCount(spark: SparkSession, table: String,
-      version: Option[Long] = None): Long = {
-    val v = version.getOrElse {
-      val vs = versions(table)
-      require(vs.nonEmpty, s"no commits at $table")
-      vs.last
-    }
-    val m = manifest(table, v)
+      version: Option[Long] = None): Long =
+    rowCountOf(spark, table, snapshot(table, version))
+
+  private def rowCountOf(spark: SparkSession, table: String, m: Manifest): Long = {
     val known = fileRows(table, m.files)
     var total = m.files
       .map(f => known.getOrElse(f, footerRows(spark, Paths.get(table, f)))).sum
@@ -716,16 +723,6 @@ class VersionedTableOps(val store: CommitStore) {
   private def requireInit(table: String, base: Long, op: String): Unit =
     require(base > 0, s"$op on uninitialized table $table (no commits)")
 
-  /** Thrown by a mutation closure whose plan changes NOTHING — caught
-    * at the entry point, which returns the current head instead of
-    * publishing a byte-identical 'delete'/'update' version (a no-op
-    * commit would gratuitously kill every streaming consumer of an
-    * otherwise append-only table and pollute history).
-    */
-  private object NoopMutation extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
-
   /** Shared UPDATE-assignment validation for the COW and MoR paths —
     * runs UNCONDITIONALLY against an empty frame of the table schema,
     * so an invalid statement fails identically whether or not the
@@ -752,29 +749,13 @@ class VersionedTableOps(val store: CommitStore) {
     setMap
   }
 
-  /** The version's PHYSICAL→LOGICAL column-name map (empty when no
-    * rename ever happened — the identity fast path everywhere).
+  /** Logical column name → the physical name stored in data files,
+    * through a manifest's PHYSICAL→LOGICAL map (`renames`; empty when
+    * no rename ever happened — the identity fast path everywhere).
     * Physical names are assigned when a column first appears and
     * NEVER change; [[renameColumn]] only re-points the logical name,
     * so every data file ever staged carries physical names uniformly.
     */
-  private val renamesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Map[String, String]]()
-
-  private[sources] def manifestRenames(table: String, v: Long): Map[String, String] = {
-    // manifests are immutable once published — memoized so the hot
-    // read path of a never-renamed table decodes once per (table,
-    // version), not per probe/stage call
-    val key = (table, v)
-    val hit = renamesMemo.get(key)
-    if (hit != null) return hit
-    if (renamesMemo.size > 4096) renamesMemo.clear() // bounded, immutable content
-    val parsed = manifest(table, v).renames
-    renamesMemo.put(key, parsed)
-    parsed
-  }
-
-  /** Logical column name → the physical name stored in data files. */
   private[sources] def physicalName(renames: Map[String, String],
       logical: String): String =
     renames.collectFirst { case (ph, lo) if lo == logical => ph }.getOrElse(logical)
@@ -844,16 +825,11 @@ class VersionedTableOps(val store: CommitStore) {
   def detail(spark: SparkSession, table: String,
       version: Option[Long] = None): DataFrame = {
     import spark.implicits._
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no commits at $table")
-    val v = version.getOrElse(vs.last)
-    require(store.exists(commitsDir(table), manifestName(v)),
-      s"version $v of $table was vacuumed or never existed")
-    val m = manifest(table, v)
+    val m = snapshot(table, version)
     val bytes = m.files.map(f => Files.size(Paths.get(table, f))).sum
-    Seq((v, m.op, new java.sql.Timestamp(commitTimeMs(table, m)),
+    Seq((m.version, m.op, new java.sql.Timestamp(commitTimeMs(table, m)),
         m.files.size.toLong, m.dvs.size.toLong, bytes,
-        rowCount(spark, table, Some(v)), schemaOf(spark, table, m).fields.length,
+        rowCountOf(spark, table, m), schemaOf(spark, table, m).fields.length,
         m.constraints.size))
       .toDF("version", "op", "ts", "num_files", "num_dvs", "size_bytes",
         "num_rows", "num_columns", "num_constraints")
@@ -983,8 +959,7 @@ class VersionedTableOps(val store: CommitStore) {
   /** True when `table` exists but its HEAD commit is [[dropTable]]'s
     * tombstone — the state the SQL catalog surfaces as "no table".
     */
-  def isDropped(table: String): Boolean =
-    versions(table).lastOption.exists(v => manifest(table, v).op == "drop_table")
+  def isDropped(table: String): Boolean = headManifest(table).op == "drop_table"
 
   /** ALTER TABLE … RENAME TO as a NAMESPACE MOVE (round 13): the
     * commit-log directory IS the table's identity, and every manifest
@@ -1008,8 +983,9 @@ class VersionedTableOps(val store: CommitStore) {
     * re-resolve by path on their next file open.
     */
   def renameTable(spark: SparkSession, from: String, to: String): Unit = {
-    require(versions(from).nonEmpty, s"no table at $from to rename")
-    require(!isDropped(from),
+    val head = headManifest(from)
+    require(head.version > 0, s"no table at $from to rename")
+    require(head.op != "drop_table",
       s"$from is dropped — vacuum and re-create; a tombstoned head is not renameable")
     val fromPath = Paths.get(from)
     val toPath = Paths.get(to)
@@ -1019,9 +995,6 @@ class VersionedTableOps(val store: CommitStore) {
     Option(toPath.getParent).foreach(Files.createDirectories(_))
     Files.move(fromPath, toPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     store.renameDir(fromPath, toPath) // object stores re-key manifests; POSIX no-op
-    // free the old identity: a fresh table re-created at `from` must
-    // not inherit memoized (path, version) rename maps
-    renamesMemo.keySet.removeIf(_._1 == from)
   }
 
   /** Column names recorded by ANY retained manifest — the set a new
@@ -1044,7 +1017,7 @@ class VersionedTableOps(val store: CommitStore) {
     require(base.renames == ren0,
       s"concurrent column rename on $table while this write was staging; retry")
 
-  private def requireNoRevivedColumns(table: String, df: DataFrame,
+  private def requireNoRevivedColumns(table: String, head: Manifest, df: DataFrame,
       headCols: Seq[String]): Unit = {
     val added = df.schema.fieldNames.filterNot(headCols.contains)
     if (added.nonEmpty) {
@@ -1053,10 +1026,8 @@ class VersionedTableOps(val store: CommitStore) {
       // its original name inside every file forever — a new column
       // with that name would collide physically even though the
       // logical schema looks free)
-      val phys = versions(table).lastOption
-        .map(manifestRenames(table, _).keySet).getOrElse(Set.empty)
-      val revived = added.filter(n =>
-        everRecordedColumns(table).contains(n) || phys.contains(n))
+      val recorded = everRecordedColumns(table)
+      val revived = added.filter(n => recorded.contains(n) || head.renames.contains(n))
       require(revived.isEmpty,
         s"cannot add column(s) ${revived.mkString(", ")} to $table: the name is " +
           "recorded by a retained manifest or is a renamed column's physical " +
@@ -1071,7 +1042,7 @@ class VersionedTableOps(val store: CommitStore) {
     * was in force at that version.
     */
   def checkConstraints(table: String, version: Option[Long] = None): Seq[(String, String)] =
-    manifest(table, version.getOrElse(versions(table).last)).constraints
+    snapshot(table, version).constraints
 
   /** ADD a CHECK constraint (SQL-standard semantics: a row violates
     * only when the expression is FALSE — NULL passes; NOT NULL is
@@ -1089,7 +1060,7 @@ class VersionedTableOps(val store: CommitStore) {
       requireInit(table, m.version, "addCheckConstraint")
       require(!m.constraints.exists(_._1 == name),
         s"constraint $name already exists on $table")
-      val bad = read(spark, table, Some(m.version))
+      val bad = readSnapshot(spark, table, m)
         .filter(!coalesce(expr(sqlExpr), lit(true))).count()
       require(bad == 0,
         s"cannot add CHECK $name: $bad existing rows of $table violate ($sqlExpr)")
@@ -1098,32 +1069,29 @@ class VersionedTableOps(val store: CommitStore) {
     }
 
   /** DROP a CHECK constraint by name. */
-  def dropCheckConstraint(spark: SparkSession, table: String, name: String): Long = {
-    require(headConstraints(table).exists(_._1 == name), s"no constraint $name on $table")
+  def dropCheckConstraint(spark: SparkSession, table: String, name: String): Long =
     commit(table, "set_constraint") { m =>
       requireInit(table, m.version, "dropCheckConstraint")
+      require(m.constraints.exists(_._1 == name), s"no constraint $name on $table")
       m.copy(constraints = m.constraints.filterNot(_._1 == name))
         .withSchema(schemaOf(spark, table, m))
     }
-  }
 
   /** Enforce the table's CHECK constraints on rows about to be
     * committed — ONE aggregate job over the batch for ALL constraints
     * (a conditional-count column per rule); a violation throws BEFORE
     * anything is staged or published.
     */
-  private def enforceConstraints(table: String, df: DataFrame,
+  private def enforceConstraints(table: String, base: Manifest, df: DataFrame,
       cons: Seq[(String, String)]): Unit =
     if (cons.nonEmpty) {
-      // align the batch to the head schema first: an append may
+      // align the batch to the base schema first: an append may
       // legitimately omit an evolved column (the committed read
       // materializes it as NULL), and SQL CHECK three-valued semantics
       // pass on NULL — without the typed-NULL fill, a constraint
       // naming the omitted column would throw an unresolved-column
       // AnalysisException on a batch the committed table would accept
-      val headFields = versions(table).lastOption
-        .flatMap(v => manifest(table, v).structType)
-        .map(_.fields.toSeq).getOrElse(Seq.empty)
+      val headFields = base.structType.map(_.fields.toSeq).getOrElse(Seq.empty)
       val present = df.columns.toSet
       val aligned = headFields.filterNot(f => present.contains(f.name))
         .foldLeft(df)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
@@ -1138,9 +1106,6 @@ class VersionedTableOps(val store: CommitStore) {
           s"CHECK constraint $name violated by $bad written rows on $table ($e)")
       }
     }
-
-  private def headConstraints(table: String): Seq[(String, String)] =
-    versions(table).lastOption.map(manifest(table, _).constraints).getOrElse(Nil)
 
   /** Close the enforce-then-publish race: a constraint ADDED between
     * the pre-stage validation and the fail-if-exists publish would
@@ -1162,7 +1127,7 @@ class VersionedTableOps(val store: CommitStore) {
       val df = base.renames.foldLeft(raw) { case (d, (ph, lo)) =>
         if (d.columns.contains(ph) && !d.columns.contains(lo))
           d.withColumnRenamed(ph, lo) else d }
-      enforceConstraints(table, df, late)
+      enforceConstraints(table, base, df, late)
     }
   }
 
@@ -1199,16 +1164,13 @@ class VersionedTableOps(val store: CommitStore) {
     // surface (dropPartition, filesForPartition, joinPartitioned)
     // reaches them through the same physicalName translation it
     // already does for renamed columns
-    val ren = if (idMapped) Some(idExtend(Map.empty, df.columns, retireAbsent = false))
-      else None
-    val physParts = ren.fold(partCols)(m => partCols.map(c => physicalName(m, c)))
-    val staged = stageData(table, df, "w", Some(physParts), renFor = ren,
-      partWidthHint = partWidth)
+    val ren = idLayout(Manifest(colMap = if (idMapped) "id" else ""), df.columns,
+      retireAbsent = false)
+    val layout = ren.copy(partitionBy = partCols.map(physicalName(ren.renames, _)))
+    val staged = stageData(table, layout, df, "w", partWidthHint = partWidth)
     commit(table, "overwrite", txns) { m =>
       require(m.version == 0, s"$table gained commits mid-create")
-      m.copy(files = staged, partitionBy = physParts,
-        renames = ren.getOrElse(m.renames), colMap = if (idMapped) "id" else m.colMap)
-        .withSchema(asStored(df.schema))
+      layout.copy(files = staged).withSchema(asStored(df.schema))
     }
   }
 
@@ -1236,10 +1198,10 @@ class VersionedTableOps(val store: CommitStore) {
           s"$colName and may hold rows of any value — DROP PARTITION would " +
           "silently under-delete; use delete() or rewrite the table first")
       val keep = m.files.filterNot(_.split('/').contains(seg))
-      if (keep.size == m.files.size) throw NoopMutation
+      if (keep.size == m.files.size) throw Unchanged(m.version)
       m.copy(files = keep).withSchema(schemaOf(spark, table, m))
     }
-    catch { case NoopMutation => versions(table).last }
+    catch { case Unchanged(base) => base }
   }
 
   /** Snapshot files inside / total — the partition-pruning probe
@@ -1248,29 +1210,26 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def filesForPartition(table: String, colName: String, value: String,
       version: Option[Long] = None): (Seq[String], Int) = {
-    requireLiteralPartitionValue(value)
-    val v = version.getOrElse {
-      val vs = versions(table)
-      require(vs.nonEmpty, s"no commits at $table")
-      vs.last
-    }
-    val m = manifest(table, v)
+    val m = snapshot(table, version)
+    (partitionFiles(table, m, colName, Seq(value)), m.files.size)
+  }
+
+  /** The files of `m` under the value directories of `values`. */
+  private def partitionFiles(table: String, m: Manifest, colName: String,
+      values: Seq[String]): Seq[String] = {
+    values.foreach(requireLiteralPartitionValue)
     val ph = physicalName(m.renames, colName)
     require(m.partitionBy.contains(ph), s"$colName is not a partition column of $table")
-    val seg = s"${partSeg(ph)}=$value"
-    (m.files.filter(_.split('/').contains(seg)), m.files.size)
+    val segs = values.map(x => s"${partSeg(ph)}=$x").toSet
+    m.files.filter(_.split('/').exists(segs.contains))
   }
 
   /** Partition-scoped read: opens only the value directory's files
     * (deletion vectors subtracted like any read).
     */
   def readPartition(spark: SparkSession, table: String, colName: String,
-      value: String, version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse(versions(table).last)
-    val (kept, _) = filesForPartition(table, colName, value, Some(v))
-    if (kept.isEmpty) read(spark, table, Some(v)).limit(0)
-    else readFiles(spark, table, manifest(table, v), kept)
-  }
+      value: String, version: Option[Long] = None): DataFrame =
+    readPartitions(spark, table, colName, Seq(value), version)
 
   /** [[readPartition]] over SEVERAL values in one scan: opens exactly
     * the union of the value directories' files. The multi-value read a
@@ -1278,16 +1237,12 @@ class VersionedTableOps(val store: CommitStore) {
     * buckets only, one job).
     */
   def readPartitions(spark: SparkSession, table: String, colName: String,
-      values: Seq[String], version: Option[Long] = None): DataFrame = {
-    values.foreach(requireLiteralPartitionValue)
-    val m = manifest(table, version.getOrElse(versions(table).last))
-    val ph = physicalName(m.renames, colName)
-    require(m.partitionBy.contains(ph), s"$colName is not a partition column of $table")
-    val segs = values.map(x => s"${partSeg(ph)}=$x").toSet
-    val kept = m.files.filter(_.split('/').exists(segs.contains))
-    if (kept.isEmpty) read(spark, table, Some(m.version)).limit(0)
-    else readFiles(spark, table, m, kept)
-  }
+      values: Seq[String], version: Option[Long] = None): DataFrame =
+    readPartitionsOf(spark, table, snapshot(table, version), colName, values)
+
+  private def readPartitionsOf(spark: SparkSession, table: String, m: Manifest,
+      colName: String, values: Seq[String]): DataFrame =
+    readKept(spark, table, m, partitionFiles(table, m, colName, values))
 
   /** REPLACE the named value-partitions of `colName` with `df`'s rows
     * in ONE atomic commit: untouched partitions' files carry into the
@@ -1315,28 +1270,32 @@ class VersionedTableOps(val store: CommitStore) {
       expectedBase: Option[Long] = None): Long = {
     values.foreach(requireLiteralPartitionValue)
     require(values.distinct.size == values.size, s"duplicate values: $values")
-    def applied = txns.nonEmpty && txns.forall { case (app, ver) =>
-      lastTxn(table, app).exists(_ >= ver) }
-    if (applied) return versions(table).last
+    val head = headManifest(table)
+    if (txnsApplied(table, head, txns)) return head.version
     // cheap pre-check (round-10 advice): a caller-pinned base that has
     // already moved is GUARANTEED to refuse inside the closure — don't
     // stage (and orphan) a full copy of the replacement data first.
-    // The in-closure check below remains the authoritative one.
-    expectedBase.filter(_ != versions(table).lastOption.getOrElse(0L))
-      .foreach(_ => throw ExpectedBaseMoved)
-    val head = headManifest(table)
-    val (cons0, ren0) = (head.constraints, head.renames)
-    enforceConstraints(table, df, cons0)
-    val renExt = if (head.colMap == "id")
-      Some(idExtend(ren0, df.columns, retireAbsent = false)) else None
-    val ren = renExt.getOrElse(ren0)
-    val ph = physicalName(ren, colName)
+    // The in-closure check remains the authoritative one.
+    expectedBase.filter(_ != head.version).foreach(_ => throw ExpectedBaseMoved)
+    replacePartitionsAt(spark, table, head, df, colName, values, txns,
+      conditional = expectedBase.nonEmpty)
+  }
+
+  /** [[replacePartitions]] staged against the resolved `head`; with
+    * `conditional`, the commit refuses (ExpectedBaseMoved) unless it
+    * lands directly on `head`.
+    */
+  private def replacePartitionsAt(spark: SparkSession, table: String, head: Manifest,
+      df: DataFrame, colName: String, values: Seq[String],
+      txns: Seq[(String, Long)], conditional: Boolean): Long = {
+    enforceConstraints(table, head, df, head.constraints)
+    val layout = idLayout(head, df.columns, retireAbsent = false)
+    val ph = physicalName(layout.renames, colName)
     // the replaced-value list bounds how many partition dirs the stage
     // can write — exactly the hash-distribution width hint stageData
     // wants (spread a many-bucket refresh's per-file writer setup,
     // skip the exchange for a single-bucket delta)
-    val staged = stageData(table, df, "rp", renFor = renExt,
-      partWidthHint = Some(values.size))
+    val staged = stageData(table, layout, df, "rp", partWidthHint = Some(values.size))
     val segs = values.map(x => s"${partSeg(ph)}=$x").toSet
     val offside = staged.filterNot(_.split('/').exists(segs.contains))
     require(offside.isEmpty,
@@ -1345,16 +1304,15 @@ class VersionedTableOps(val store: CommitStore) {
         offside.take(3).mkString(", ") +
         " — replacePartitions would silently mix replacement and append")
     try commit(table, "replace_partitions", txns) { m =>
-      if (applied) throw TxnAlreadyApplied
+      if (txnsApplied(table, m, txns)) throw Unchanged(m.version)
       // optimistic-concurrency hook ([[mergeKeyed]]): the caller
       // derived `df` from a pinned head OUTSIDE this closure, so a
       // moved base must refuse — publishing would silently drop the
       // racing commit's rows in the replaced partitions
-      expectedBase.filter(_ != m.version)
-        .foreach(_ => throw ExpectedBaseMoved)
+      if (conditional && m.version != head.version) throw ExpectedBaseMoved
       requireInit(table, m.version, "replacePartitions")
-      requireRenamesUnchanged(table, m, ren0)
-      enforceLate(spark, table, m, cons0, staged)
+      requireRenamesUnchanged(table, m, head.renames)
+      enforceLate(spark, table, m, head.constraints, staged)
       require(m.partitionBy.contains(ph),
         s"$colName is not a partition column of $table (spec: ${m.partitionBy})")
       val unrouted = m.files.filterNot(_.split('/').exists(_.startsWith(partSeg(ph) + "=")))
@@ -1370,23 +1328,20 @@ class VersionedTableOps(val store: CommitStore) {
       require(conflicts.isEmpty,
         s"replacePartitions schema conflicts with $table head (types cannot " +
           s"evolve): ${conflicts.mkString(", ")}")
-      m.copy(files = keep ++ staged, renames = renExt.getOrElse(m.renames))
+      m.copy(files = keep ++ staged, renames = layout.renames)
         .withSchema(unionSchema(headSchema, stored))
     }
-    catch { case TxnAlreadyApplied => versions(table).last }
+    catch { case Unchanged(base) => base }
   }
 
   /** Partition columns by LOGICAL name — [[partitionSpec]] returns
     * the PHYSICAL names data files carry (id mapping / renames), this
     * is the user-facing view (SQL SHOW PARTITIONS, DataFrame callers).
     */
-  def partitionColumns(table: String, version: Option[Long] = None): Seq[String] =
-    versions(table).lastOption match {
-      case None => Nil
-      case Some(last) =>
-        val m = manifest(table, version.getOrElse(last))
-        m.partitionBy.map(ph => m.renames.getOrElse(ph, ph))
-    }
+  def partitionColumns(table: String, version: Option[Long] = None): Seq[String] = {
+    val m = snapshot(table, version)
+    m.partitionBy.map(ph => m.renames.getOrElse(ph, ph))
+  }
 
   /** The distinct raw partition-segment values of one column in a
     * snapshot, sorted — metadata-only (manifest paths, no IO); the
@@ -1394,12 +1349,7 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def partitionValues(table: String, colName: String,
       version: Option[Long] = None): Seq[String] = {
-    val v = version.getOrElse {
-      val vs = versions(table)
-      require(vs.nonEmpty, s"no commits at $table")
-      vs.last
-    }
-    val m = manifest(table, v)
+    val m = snapshot(table, version)
     val ph = physicalName(m.renames, colName)
     require(m.partitionBy.contains(ph), s"$colName is not a partition column of $table")
     // raw path-encoded values, the exact strings the writer produced
@@ -1472,40 +1422,10 @@ class VersionedTableOps(val store: CommitStore) {
       maxBranches: Int = 64,
       rangesLeft: Seq[(String, Double, Double)] = Nil,
       rangesRight: Seq[(String, Double, Double)] = Nil): DataFrame = {
-    val jt = joinType.toLowerCase.replace("_", "").replace("outer", "") match {
-      case "inner" => "inner"
-      case "left" => "left_outer"
-      case "right" => "right_outer"
-      case "full" | "" => "full_outer" // "outer" alone means full
-      case other => throw new IllegalArgumentException(
-        s"joinPartitioned supports inner/left/right/full, not '$joinType'")
-    }
-    val mL = manifest(left, vLeft.getOrElse(versions(left).last))
-    val mR = manifest(right, vRight.getOrElse(versions(right).last))
-    val (specL, specR, renL, renR) = (mL.partitionBy, mR.partitionBy, mL.renames, mR.renames)
-    require(specL.nonEmpty && specR.nonEmpty,
-      s"joinPartitioned needs BOTH tables partitioned ($left: $specL, $right: $specR)")
-    val logSpecL = specL.map(ph => renL.getOrElse(ph, ph))
-    val logSpecR = specR.map(ph => renR.getOrElse(ph, ph))
-    val k = (1 to math.min(logSpecL.size, logSpecR.size)).reverse.find(i =>
-      logSpecL.take(i) == logSpecR.take(i) &&
-        logSpecL.take(i).forall(on.contains)).getOrElse(0)
-    require(k >= 1,
-      s"the leading partition columns must agree and be joined on " +
-        s"($left: $logSpecL, $right: $logSpecR, on: $on)")
-    val tupL = partitionTupleFiles(mL.files, specL.take(k))
-    val tupR = partitionTupleFiles(mR.files, specR.take(k))
-    Seq(left -> tupL, right -> tupR).foreach { case (t, m) =>
-      require(!m.keysIterator.exists(_.contains(null)),
-        s"files of $t predate the partition routing and may hold rows of " +
-          "any value — rewrite the table before an aligned join")
-    }
-    val nullSeg = "__HIVE_DEFAULT_PARTITION__"
-    def nonNull(ts: Set[Seq[String]]) = ts.filterNot(_.contains(nullSeg))
-    val common = (nonNull(tupL.keySet) intersect nonNull(tupR.keySet))
-      .toSeq.sortBy(_.mkString("/"))
-    lazy val fullL = read(spark, left, Some(mL.version))
-    lazy val fullR = read(spark, right, Some(mR.version))
+    val (mL, mR) = (snapshot(left, vLeft), snapshot(right, vRight))
+    val (jt, tupL, tupR, common) = alignedTuples(left, right, mL, mR, on, joinType)
+    lazy val fullL = readSnapshot(spark, left, mL)
+    lazy val fullR = readSnapshot(spark, right, mR)
     // zone-map composition: prune each branch's files on the side's
     // ranges (stats are keyed by PHYSICAL names), read the survivors,
     // and re-apply the exact native-typed residual on LOGICAL names.
@@ -1515,11 +1435,7 @@ class VersionedTableOps(val store: CommitStore) {
         files: Seq[String], ranges: Seq[(String, Double, Double)]): DataFrame =
       if (ranges.isEmpty) readFiles(spark, table, m, files)
       else {
-        val phys = ranges.map { case (c, lo, hi) => (physicalName(m.renames, c), lo, hi) }
-        val kept = keepByZoneMaps(table, files, phys, Nil, Nil)
-        val base =
-          if (kept.isEmpty) readFiles(spark, table, m, files).limit(0)
-          else readFiles(spark, table, m, kept)
+        val base = readKept(spark, table, m, keptByRanges(table, m, files, ranges))
         ranges.foldLeft(base) { case (d, (c, lo, hi)) =>
           d.filter(residualCond(d, c, lo, hi))
         }
@@ -1537,17 +1453,13 @@ class VersionedTableOps(val store: CommitStore) {
     } ++ (if (residual.isEmpty) Nil else Seq(
       readL(residual.flatMap(tupL).sorted)
         .join(readR(residual.flatMap(tupR).sorted), on, jt)))
-    val commonSet = common.toSet
-    def rest(m: Map[Seq[String], Seq[String]]): Seq[String] =
-      m.view.filterKeys(!commonSet.contains(_)).toSeq
-        .sortBy(_._1.mkString("/")).flatMap(_._2)
     val leftRest =
-      if ((jt == "left_outer" || jt == "full_outer") && rest(tupL).nonEmpty)
-        Seq(readL(rest(tupL)).join(fullR.limit(0), on, jt))
+      if ((jt == "left_outer" || jt == "full_outer") && rest(tupL, common).nonEmpty)
+        Seq(readL(rest(tupL, common)).join(fullR.limit(0), on, jt))
       else Nil
     val rightRest =
-      if ((jt == "right_outer" || jt == "full_outer") && rest(tupR).nonEmpty)
-        Seq(fullL.limit(0).join(readR(rest(tupR)), on, jt))
+      if ((jt == "right_outer" || jt == "full_outer") && rest(tupR, common).nonEmpty)
+        Seq(fullL.limit(0).join(readR(rest(tupR, common)), on, jt))
       else Nil
     val branches = pairs ++ leftRest ++ rightRest
     if (branches.isEmpty) fullL.join(fullR, on, jt).limit(0)
@@ -1567,44 +1479,67 @@ class VersionedTableOps(val store: CommitStore) {
       vLeft: Option[Long] = None, vRight: Option[Long] = None,
       rangesLeft: Seq[(String, Double, Double)] = Nil,
       rangesRight: Seq[(String, Double, Double)] = Nil): (Int, Int) = {
+    val (mL, mR) = (snapshot(left, vLeft), snapshot(right, vRight))
+    val (jt, tupL, tupR, common) = alignedTuples(left, right, mL, mR, on, joinType)
+    def kept(table: String, m: Manifest, files: Seq[String],
+        ranges: Seq[(String, Double, Double)]): Int =
+      if (ranges.isEmpty) files.size else keptByRanges(table, m, files, ranges).size
+    val nL = common.map(t => kept(left, mL, tupL(t), rangesLeft)).sum +
+      (if (jt == "left_outer" || jt == "full_outer")
+        kept(left, mL, rest(tupL, common), rangesLeft) else 0)
+    val nR = common.map(t => kept(right, mR, tupR(t), rangesRight)).sum +
+      (if (jt == "right_outer" || jt == "full_outer")
+        kept(right, mR, rest(tupR, common), rangesRight) else 0)
+    (nL, nR)
+  }
+
+  /** The aligned-join plan [[joinPartitioned]] and
+    * [[joinPartitionedFiles]] share: the normalized join type, each
+    * side's files by value tuple over the longest common spec prefix
+    * that is joined `on`, and the non-null tuples both sides hold,
+    * sorted.
+    */
+  private def alignedTuples(left: String, right: String, mL: Manifest, mR: Manifest,
+      on: Seq[String], joinType: String): (String, Map[Seq[String], Seq[String]],
+      Map[Seq[String], Seq[String]], Seq[Seq[String]]) = {
     val jt = joinType.toLowerCase.replace("_", "").replace("outer", "") match {
       case "inner" => "inner"
       case "left" => "left_outer"
       case "right" => "right_outer"
-      case "full" | "" => "full_outer"
+      case "full" | "" => "full_outer" // "outer" alone means full
       case other => throw new IllegalArgumentException(
-        s"joinPartitionedFiles supports inner/left/right/full, not '$joinType'")
+        s"joinPartitioned supports inner/left/right/full, not '$joinType'")
     }
-    val mL = manifest(left, vLeft.getOrElse(versions(left).last))
-    val mR = manifest(right, vRight.getOrElse(versions(right).last))
-    val (specL, specR, renL, renR) = (mL.partitionBy, mR.partitionBy, mL.renames, mR.renames)
-    val logSpecL = specL.map(ph => renL.getOrElse(ph, ph))
-    val logSpecR = specR.map(ph => renR.getOrElse(ph, ph))
+    val (specL, specR) = (mL.partitionBy, mR.partitionBy)
+    require(specL.nonEmpty && specR.nonEmpty,
+      s"joinPartitioned needs BOTH tables partitioned ($left: $specL, $right: $specR)")
+    val logSpecL = specL.map(ph => mL.renames.getOrElse(ph, ph))
+    val logSpecR = specR.map(ph => mR.renames.getOrElse(ph, ph))
     val k = (1 to math.min(logSpecL.size, logSpecR.size)).reverse.find(i =>
       logSpecL.take(i) == logSpecR.take(i) &&
         logSpecL.take(i).forall(on.contains)).getOrElse(0)
-    require(k >= 1, "the leading partition columns must agree and be joined on")
+    require(k >= 1,
+      s"the leading partition columns must agree and be joined on " +
+        s"($left: $logSpecL, $right: $logSpecR, on: $on)")
     val tupL = partitionTupleFiles(mL.files, specL.take(k))
     val tupR = partitionTupleFiles(mR.files, specR.take(k))
+    Seq(left -> tupL, right -> tupR).foreach { case (t, m) =>
+      require(!m.keysIterator.exists(_.contains(null)),
+        s"files of $t predate the partition routing and may hold rows of " +
+          "any value — rewrite the table before an aligned join")
+    }
     val nullSeg = "__HIVE_DEFAULT_PARTITION__"
     def nonNull(ts: Set[Seq[String]]) = ts.filterNot(_.contains(nullSeg))
-    val common = nonNull(tupL.keySet) intersect nonNull(tupR.keySet)
-    def kept(table: String, ren: Map[String, String], files: Seq[String],
-        ranges: Seq[(String, Double, Double)]): Int =
-      if (ranges.isEmpty) files.size
-      else keepByZoneMaps(table, files,
-        ranges.map { case (c, lo, hi) => (physicalName(ren, c), lo, hi) },
-        Nil, Nil).size
-    val commonSet = common
-    def rest(m: Map[Seq[String], Seq[String]]): Seq[String] =
-      m.view.filterKeys(!commonSet.contains(_)).toSeq.flatMap(_._2)
-    val nL = common.toSeq.map(t => kept(left, renL, tupL(t), rangesLeft)).sum +
-      (if (jt == "left_outer" || jt == "full_outer")
-        kept(left, renL, rest(tupL), rangesLeft) else 0)
-    val nR = common.toSeq.map(t => kept(right, renR, tupR(t), rangesRight)).sum +
-      (if (jt == "right_outer" || jt == "full_outer")
-        kept(right, renR, rest(tupR), rangesRight) else 0)
-    (nL, nR)
+    (jt, tupL, tupR,
+      (nonNull(tupL.keySet) intersect nonNull(tupR.keySet)).toSeq.sortBy(_.mkString("/")))
+  }
+
+  /** The files of the tuples outside `common`, in tuple order. */
+  private def rest(tuples: Map[Seq[String], Seq[String]],
+      common: Seq[Seq[String]]): Seq[String] = {
+    val commonSet = common.toSet
+    tuples.view.filterKeys(!commonSet.contains(_)).toSeq
+      .sortBy(_._1.mkString("/")).flatMap(_._2)
   }
 
   /** Probe/drop values must BE the path segment Spark's writer
@@ -1634,11 +1569,11 @@ class VersionedTableOps(val store: CommitStore) {
       df: DataFrame): Long = {
     require(versions(table).isEmpty,
       s"$table already has commits: column mapping is set at creation")
-    val ren = idExtend(Map.empty, df.columns, retireAbsent = false)
-    val staged = stageData(table, df, "w", renFor = Some(ren))
+    val layout = idLayout(Manifest(colMap = "id"), df.columns, retireAbsent = false)
+    val staged = stageData(table, layout, df, "w")
     commit(table, "overwrite") { m =>
       require(m.version == 0, s"$table gained commits mid-create")
-      m.copy(files = staged, renames = ren, colMap = "id").withSchema(asStored(df.schema))
+      layout.copy(files = staged).withSchema(asStored(df.schema))
     }
   }
 
@@ -1690,16 +1625,15 @@ class VersionedTableOps(val store: CommitStore) {
   /** Create (version 1) or fully overwrite the table with `df`. */
   def overwrite(spark: SparkSession, table: String, df: DataFrame): Long = {
     val head = headManifest(table)
-    enforceConstraints(table, df, head.constraints)
+    enforceConstraints(table, head, df, head.constraints)
     // id mode: the replacement schema keeps the ids of surviving
     // columns, retires removed ones, assigns fresh ids to new ones
-    val renExt = if (head.colMap == "id")
-      Some(idExtend(head.renames, df.columns, retireAbsent = true)) else None
-    val staged = stageData(table, df, "w", renFor = renExt) // stage once; retries reuse it
+    val layout = idLayout(head, df.columns, retireAbsent = true)
+    val staged = stageData(table, layout, df, "w") // stage once; retries reuse it
     commit(table, "overwrite") { m =>
       requireRenamesUnchanged(table, m, head.renames)
       enforceLate(spark, table, m, head.constraints, staged)
-      m.copy(files = staged, dvs = Nil, renames = renExt.getOrElse(m.renames))
+      m.copy(files = staged, dvs = Nil, renames = layout.renames)
         .withSchema(asStored(df.schema))
     }
   }
@@ -1739,18 +1673,17 @@ class VersionedTableOps(val store: CommitStore) {
       // name-based re-add would resurrect dropped data (dropColumn
       // scaladoc). ID mode needs no refusal — the re-added column
       // gets a FRESH physical id, so old bytes cannot alias it.
-      if (!idMode) requireNoRevivedColumns(table, df, headSchema.fieldNames)
+      if (!idMode) requireNoRevivedColumns(table, head, df, headSchema.fieldNames)
     }
-    enforceConstraints(table, df, head.constraints)
-    val renExt = if (idMode)
-      Some(idExtend(head.renames, df.columns, retireAbsent = false)) else None
-    val staged = stageData(table, df, "a", renFor = renExt)
+    enforceConstraints(table, head, df, head.constraints)
+    val layout = idLayout(head, df.columns, retireAbsent = false)
+    val staged = stageData(table, layout, df, "a")
     commit(table, "append") { m =>
       requireInit(table, m.version, "append")
       requireRenamesUnchanged(table, m, head.renames)
       enforceLate(spark, table, m, head.constraints, staged)
       // carried files keep their deletion vectors
-      m.copy(files = m.files ++ staged, renames = renExt.getOrElse(m.renames))
+      m.copy(files = m.files ++ staged, renames = layout.renames)
         .withSchema(unionSchema(schemaOf(spark, table, m), asStored(df.schema)))
     }
   }
@@ -1766,13 +1699,27 @@ class VersionedTableOps(val store: CommitStore) {
   def lastTxn(table: String, appId: String,
       upTo: Option[Long] = None): Option[Long] = {
     val vs = upTo.fold(versions(table))(u => versions(table).filter(_ <= u))
-    vs.reverseIterator.flatMap(v => manifest(table, v).txns.find(_._1 == appId))
-      .nextOption().map(_._2)
+    vs.lastOption.flatMap(v => txnAt(table, manifest(table, v), appId))
   }
 
-  private object TxnAlreadyApplied extends Exception {
-    override def fillInStackTrace(): Throwable = this
-  }
+  /** [[lastTxn]] as of the resolved manifest `m`: its own watermarks,
+    * then the retained manifests below it, newest-first down to the
+    * vacuum horizon (retained versions are contiguous — vacuum drops
+    * the oldest first).
+    */
+  private def txnAt(table: String, m: Manifest, appId: String): Option[Long] =
+    Iterator.iterate(Option(m))(_.filter(_.version > 1).flatMap(b =>
+        try Some(manifest(table, b.version - 1))
+        catch { case _: java.nio.file.NoSuchFileException => None }))
+      .takeWhile(_.nonEmpty).flatMap(_.get.txns.find(_._1 == appId))
+      .nextOption().map(_._2)
+
+  /** The txn writers' replay rule against base `m`: true when `txns`
+    * is non-empty and every (appId, txnVer) watermark is already at
+    * or past its version.
+    */
+  private def txnsApplied(table: String, m: Manifest, txns: Seq[(String, Long)]): Boolean =
+    txns.nonEmpty && txns.forall { case (app, ver) => txnAt(table, m, app).exists(_ >= ver) }
 
   private object ExpectedBaseMoved extends Exception(
     "expectedBase moved: a concurrent commit advanced the table head") {
@@ -1796,19 +1743,18 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def appendIdempotent(spark: SparkSession, table: String, df: DataFrame,
       appId: String, txnVer: Long): Long = {
-    def applied = lastTxn(table, appId).exists(_ >= txnVer)
-    if (applied) return versions(table).last // common replay path: stage nothing
+    val txns = Seq(appId -> txnVer)
     val head = headManifest(table)
+    if (txnsApplied(table, head, txns)) return head.version // common replay path: stage nothing
     val idMode = head.colMap == "id"
-    enforceConstraints(table, df, head.constraints)
-    val renExt = if (idMode)
-      Some(idExtend(head.renames, df.columns, retireAbsent = false)) else None
-    val staged = stageData(table, df, "a", renFor = renExt)
-    try commit(table, "append", Seq(appId -> txnVer)) { m =>
-      if (applied) throw TxnAlreadyApplied
+    enforceConstraints(table, head, df, head.constraints)
+    val layout = idLayout(head, df.columns, retireAbsent = false)
+    val staged = stageData(table, layout, df, "a")
+    try commit(table, "append", txns) { m =>
+      if (txnsApplied(table, m, txns)) throw Unchanged(m.version)
       requireRenamesUnchanged(table, m, head.renames)
       enforceLate(spark, table, m, head.constraints, staged)
-      val withFiles = m.copy(files = m.files ++ staged, renames = renExt.getOrElse(m.renames))
+      val withFiles = m.copy(files = m.files ++ staged, renames = layout.renames)
       if (m.version == 0) withFiles.withSchema(asStored(df.schema))
       else {
         val headSchema = schemaOf(spark, table, m)
@@ -1822,11 +1768,11 @@ class VersionedTableOps(val store: CommitStore) {
         // append with an evolved upstream schema must not resurrect a
         // dropped column's old values out of the carried files; id
         // mode needs no refusal (fresh physical ids cannot alias)
-        if (!idMode) requireNoRevivedColumns(table, df, headSchema.fieldNames)
+        if (!idMode) requireNoRevivedColumns(table, m, df, headSchema.fieldNames)
         withFiles.withSchema(unionSchema(headSchema, stored))
       }
     }
-    catch { case TxnAlreadyApplied => versions(table).last }
+    catch { case Unchanged(base) => base }
   }
 
   /** [[overwrite]] carrying the same (appId, txnVer) idempotence
@@ -1855,22 +1801,19 @@ class VersionedTableOps(val store: CommitStore) {
     require(txns.nonEmpty, "overwriteTxns needs at least one watermark")
     require(txns.map(_._1).distinct.size == txns.size,
       s"duplicate txn appIds: ${txns.map(_._1)}")
-    def applied = txns.forall { case (app, ver) =>
-      lastTxn(table, app).exists(_ >= ver) }
-    if (applied) return versions(table).last
     val head = headManifest(table)
-    enforceConstraints(table, df, head.constraints)
-    val renExt = if (head.colMap == "id")
-      Some(idExtend(head.renames, df.columns, retireAbsent = true)) else None
-    val staged = stageData(table, df, "w", renFor = renExt)
+    if (txnsApplied(table, head, txns)) return head.version
+    enforceConstraints(table, head, df, head.constraints)
+    val layout = idLayout(head, df.columns, retireAbsent = true)
+    val staged = stageData(table, layout, df, "w")
     try commit(table, "overwrite", txns) { m =>
-      if (applied) throw TxnAlreadyApplied
+      if (txnsApplied(table, m, txns)) throw Unchanged(m.version)
       requireRenamesUnchanged(table, m, head.renames)
       enforceLate(spark, table, m, head.constraints, staged)
-      m.copy(files = staged, dvs = Nil, renames = renExt.getOrElse(m.renames))
+      m.copy(files = staged, dvs = Nil, renames = layout.renames)
         .withSchema(asStored(df.schema))
     }
-    catch { case TxnAlreadyApplied => versions(table).last }
+    catch { case Unchanged(base) => base }
   }
 
   /** MERGE upsert keyed by `key` (the q_upsert shape, now with a
@@ -1890,19 +1833,11 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def upsert(spark: SparkSession, table: String, updates: DataFrame,
       key: String): Long =
-    mergeKeyedAs(spark, table, "upsert", updates, Seq(key), (cur, upd) => {
-      val cols = cur.columns
-      val merged = cur.as("t").join(upd.as("u"), Seq(key), "full_outer")
-        .select(cols.map(c =>
+    mergeKeyedAs(spark, table, "upsert", updates, Seq(key), (cur, upd) =>
+      cur.as("t").join(upd.as("u"), Seq(key), "full_outer")
+        .select(cur.columns.map(c =>
           if (c == key) col(key)
-          else coalesce(col(s"u.$c"), col(s"t.$c")).as(c)): _*)
-      // the MERGED row is what lands (a partial update mixes old and
-      // new values), so that is what the constraints must hold on —
-      // enforced here so EVERY scope path (partition, zoned, whole)
-      // carries the same rule
-      enforceConstraints(table, merged, headConstraints(table))
-      merged
-    })
+          else coalesce(col(s"u.$c"), col(s"t.$c")).as(c)): _*))
 
   /** Rewrite the current snapshot as `nFiles` even files and publish
     * it as a new version. The OLD version's files are untouched — a
@@ -1914,8 +1849,8 @@ class VersionedTableOps(val store: CommitStore) {
   def compact(spark: SparkSession, table: String, nFiles: Int = 1): Long =
     commit(table, "compact") { m =>
       requireInit(table, m.version, "compact")
-      val snap = read(spark, table, Some(m.version))
-      m.copy(files = stageData(table, snap.repartition(nFiles), "c"), dvs = Nil)
+      val snap = readSnapshot(spark, table, m)
+      m.copy(files = stageData(table, m, snap.repartition(nFiles), "c"), dvs = Nil)
         .withSchema(asStored(snap.schema))
     }
 
@@ -1954,7 +1889,7 @@ class VersionedTableOps(val store: CommitStore) {
     require(clusterBy.nonEmpty, "optimize needs at least one clustering column")
     commit(table, "optimize") { m =>
       requireInit(table, m.version, "optimize")
-      val snap = read(spark, table, Some(m.version))
+      val snap = readSnapshot(spark, table, m)
       val missing = clusterBy.filterNot(snap.columns.contains)
       require(missing.isEmpty, s"optimize columns absent from $table: $missing")
       val arranged =
@@ -1968,7 +1903,7 @@ class VersionedTableOps(val store: CommitStore) {
             .sortWithinPartitions(col("__graft_z"))
             .drop("__graft_z")
         }
-      m.copy(files = stageData(table, arranged, "o"), dvs = Nil)
+      m.copy(files = stageData(table, m, arranged, "o"), dvs = Nil)
         .withSchema(asStored(snap.schema))
     }
   }
@@ -2032,17 +1967,19 @@ class VersionedTableOps(val store: CommitStore) {
     * O(manifest). Legacy manifests without the field fall back to
     * parquet schema merging.
     */
-  def read(spark: SparkSession, table: String, version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse {
-      val vs = versions(table)
-      require(vs.nonEmpty, s"no commits at $table")
-      vs.last
-    }
-    require(store.exists(commitsDir(table), manifestName(v)),
-      s"version $v of $table was vacuumed or never existed")
-    val m = manifest(table, v)
+  def read(spark: SparkSession, table: String, version: Option[Long] = None): DataFrame =
+    readSnapshot(spark, table, snapshot(table, version))
+
+  private def readSnapshot(spark: SparkSession, table: String, m: Manifest): DataFrame =
     readFiles(spark, table, m, m.files)
-  }
+
+  /** `kept` of `m` read; the snapshot's empty frame when pruning kept
+    * nothing.
+    */
+  private def readKept(spark: SparkSession, table: String, m: Manifest,
+      kept: Seq[String]): DataFrame =
+    if (kept.isEmpty) readSnapshot(spark, table, m).limit(0)
+    else readFiles(spark, table, m, kept)
 
   /** Open manifest files with the version's RECORDED schema (no
     * footer job at all — files missing a recorded column read it as
@@ -2089,7 +2026,8 @@ class VersionedTableOps(val store: CommitStore) {
       logical: org.apache.spark.sql.types.StructType): DataFrame = {
     val phys = org.apache.spark.sql.types.StructType(
       logical.fields.map(f => f.copy(name = physicalName(m.renames, f.name))))
-    val idx = new ZoneMapFileIndex(spark, this, table, m.version, files, phys)
+    val idx = new ZoneMapFileIndex(spark, this, table, files, phys,
+      m.bloomBy.map(_._1).toSet)
     val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       idx, new org.apache.spark.sql.types.StructType(), phys, None,
       new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
@@ -2180,9 +2118,9 @@ class VersionedTableOps(val store: CommitStore) {
       vFrom: Long, vTo: Long): DataFrame = {
     require(vFrom <= vTo, s"vFrom $vFrom must be <= vTo $vTo")
     val change = "_change"
+    val (mFrom, mTo) = (snapshot(table, Some(vFrom)), snapshot(table, Some(vTo)))
     if (vFrom == vTo)
-      return read(spark, table, Some(vFrom)).limit(0).withColumn(change, lit("insert"))
-    val (mFrom, mTo) = (manifest(table, vFrom), manifest(table, vTo))
+      return readSnapshot(spark, table, mFrom).limit(0).withColumn(change, lit("insert"))
     val fromFiles = mFrom.files.toSet
     val toFiles = mTo.files
     val dvFrom = mFrom.dvs.toSet
@@ -2220,7 +2158,7 @@ class VersionedTableOps(val store: CommitStore) {
     if (fromFiles.subsetOf(toFiles.toSet) && dvFrom == dvTo.toSet) {
       val added = toFiles.filterNot(fromFiles)
       if (added.isEmpty)
-        read(spark, table, Some(vTo)).limit(0).withColumn(change, lit("insert"))
+        readSnapshot(spark, table, mTo).limit(0).withColumn(change, lit("insert"))
       else
         // rawRead, not readFiles: DVs are IDENTICAL across the range,
         // so every entry predates vFrom and can only name pre-existing
@@ -2228,8 +2166,8 @@ class VersionedTableOps(val store: CommitStore) {
         // provable no-op paid on the incremental hot path
         rawRead(spark, table, mTo, added).withColumn(change, lit("insert"))
     } else {
-      val a0 = read(spark, table, Some(vFrom))
-      val b = read(spark, table, Some(vTo))
+      val a0 = readSnapshot(spark, table, mFrom)
+      val b = readSnapshot(spark, table, mTo)
       // a RENAME between the versions changes logical names but not
       // positions or types; align the FROM side to the TO side's
       // names ONLY when the positional PHYSICAL names match — a mere
@@ -2317,10 +2255,10 @@ class VersionedTableOps(val store: CommitStore) {
       def resolvePhysical(f: String): String =
         if (vToFields.contains(f) || vToFields.isEmpty) physicalName(ren, f)
         else if (ren.contains(f)) f // already a physical name
-        else versions(table).filter(_ <= vTo).reverse.collectFirst {
-          case v0 if manifest(table, v0).structType.exists(_.fieldNames.contains(f)) =>
-            physicalName(manifest(table, v0).renames, f)
-        }.getOrElse(f) // the rare intermediate-name path only
+        else versions(table).filter(_ <= vTo).reverseIterator.map(manifest(table, _))
+          .collectFirst { case m0 if m0.structType.exists(_.fieldNames.contains(f)) =>
+            physicalName(m0.renames, f)
+          }.getOrElse(f) // the rare intermediate-name path only
       val phys = org.apache.spark.sql.types.StructType(
         schema.fields.map(f => f.copy(name = resolvePhysical(f.name))))
       def pinned(fs: Seq[String]): DataFrame = spark.read.schema(phys)
@@ -2363,7 +2301,7 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def filesForNullness(table: String, statsCol: String, wantNull: Boolean,
       version: Option[Long] = None): (Seq[String], Int) = {
-    val m = manifest(table, version.getOrElse(versions(table).last))
+    val m = snapshot(table, version)
     (keepByZoneMaps(table, m.files, Nil, Nil,
       Seq((physicalName(m.renames, statsCol), wantNull))), m.files.size)
   }
@@ -2380,18 +2318,17 @@ class VersionedTableOps(val store: CommitStore) {
   def filesForRanges(table: String, ranges: Seq[(String, Double, Double)],
       version: Option[Long] = None): (Seq[String], Int) = {
     require(ranges.nonEmpty, "at least one (column, lo, hi) range")
-    val v = version.getOrElse {
-      val vs = versions(table)
-      require(vs.nonEmpty, s"no commits at $table")
-      vs.last
-    }
-    require(store.exists(commitsDir(table), manifestName(v)),
-      s"version $v of $table was vacuumed or never existed")
-    val m = manifest(table, v)
-    (keepByZoneMaps(table, m.files,
-      ranges.map { case (c, lo, hi) => (physicalNested(m.renames, c), lo, hi) }, Nil),
-      m.files.size)
+    val m = snapshot(table, version)
+    (keptByRanges(table, m, m.files, ranges), m.files.size)
   }
+
+  /** Of `files` (of `m`), those whose zone maps can satisfy every
+    * LOGICAL-column range.
+    */
+  private def keptByRanges(table: String, m: Manifest, files: Seq[String],
+      ranges: Seq[(String, Double, Double)]): Seq[String] =
+    keepByZoneMaps(table, files,
+      ranges.map { case (c, lo, hi) => (physicalNested(m.renames, c), lo, hi) }, Nil)
 
   /** The shared pruning kernel: of `files`, those whose committed
     * stats can still satisfy EVERY numeric range (stats double
@@ -2445,20 +2382,15 @@ class VersionedTableOps(val store: CommitStore) {
   def readRanges(spark: SparkSession, table: String,
       ranges: Seq[(String, Double, Double)],
       version: Option[Long] = None): DataFrame = {
+    require(ranges.nonEmpty, "at least one (column, lo, hi) range")
     ranges.foreach { case (c, lo, hi) =>
       require(java.lang.Double.isFinite(lo) && java.lang.Double.isFinite(hi),
         s"readRange bounds for $c must be finite") }
-    val (kept, _) = filesForRanges(table, ranges, version)
-    // the full-snapshot read (footers for schema) happens ONLY on the
-    // empty-survivor path — on the hot path the probe opens nothing
-    // but the kept files, which is the entire point of the zone maps
-    if (kept.isEmpty) read(spark, table, version).limit(0)
-    else {
-      val df = readFiles(spark, table,
-        manifest(table, version.getOrElse(versions(table).last)), kept)
-      df.filter(ranges.map { case (c, lo, hi) => residualCond(df, c, lo, hi) }
-        .reduce(_ && _))
-    }
+    val m = snapshot(table, version)
+    // the kept files, their deletion vectors and the empty-survivor
+    // fallback all come from the ONE snapshot the pruning used
+    val df = readKept(spark, table, m, keptByRanges(table, m, m.files, ranges))
+    df.filter(ranges.map { case (c, lo, hi) => residualCond(df, c, lo, hi) }.reduce(_ && _))
   }
 
   /** String-domain zone-map probe: files whose committed [min, max]
@@ -2471,18 +2403,15 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def filesForRangeString(table: String, statsCol: String, lo: String, hi: String,
       version: Option[Long] = None): (Seq[String], Int) = {
+    val m = snapshot(table, version)
+    (keptByStringRange(table, m, statsCol, lo, hi), m.files.size)
+  }
+
+  private def keptByStringRange(table: String, m: Manifest, statsCol: String,
+      lo: String, hi: String): Seq[String] = {
     def ascii(s: String) = s.forall(c => c >= ' ' && c <= '~')
     require(ascii(lo) && ascii(hi), "string probe bounds must be printable ASCII")
-    val v = version.getOrElse {
-      val vs = versions(table)
-      require(vs.nonEmpty, s"no commits at $table")
-      vs.last
-    }
-    require(store.exists(commitsDir(table), manifestName(v)),
-      s"version $v of $table was vacuumed or never existed")
-    val m = manifest(table, v)
-    (keepByZoneMaps(table, m.files, Nil,
-      Seq((physicalName(m.renames, statsCol), lo, hi))), m.files.size)
+    keepByZoneMaps(table, m.files, Nil, Seq((physicalName(m.renames, statsCol), lo, hi)))
   }
 
   /** [[readRange]] for a STRING column: manifest-level skipping on the
@@ -2491,9 +2420,8 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def readRangeString(spark: SparkSession, table: String, statsCol: String,
       lo: String, hi: String, version: Option[Long] = None): DataFrame = {
-    val (kept, _) = filesForRangeString(table, statsCol, lo, hi, version)
-    if (kept.isEmpty) read(spark, table, version).limit(0)
-    else readFiles(spark, table, manifest(table, version.getOrElse(versions(table).last)), kept)
+    val m = snapshot(table, version)
+    readKept(spark, table, m, keptByStringRange(table, m, statsCol, lo, hi))
       .filter(col(statsCol).between(lit(lo), lit(hi)))
   }
 
@@ -2549,23 +2477,23 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def filesForPoints(table: String, column: String, values: Seq[Any],
       version: Option[Long] = None): (Seq[String], Int) = {
+    val m = snapshot(table, version)
+    (keptByPoints(table, m, column, values), m.files.size)
+  }
+
+  private def keptByPoints(table: String, m: Manifest, column: String,
+      values: Seq[Any]): Seq[String] = {
     require(values.nonEmpty, "at least one probe value")
-    val v = version.getOrElse {
-      val vs = versions(table)
-      require(vs.nonEmpty, s"no commits at $table")
-      vs.last
-    }
-    val m = manifest(table, v)
     val ph = physicalName(m.renames, column)
     require(m.bloomBy.exists(_._1 == ph),
-      s"$column is not bloom-indexed on $table at version $v " +
-        s"(declared: ${bloomIndexSpec(table, Some(v)).map(_._1).mkString(", ") })")
+      s"$column is not bloom-indexed on $table at version ${m.version} " +
+        s"(declared: ${logicalBlooms(m).map(_._1).mkString(", ") })")
     val dt = m.structType.flatMap(_.fields.find(_.name == column))
       .map(_.dataType).getOrElse(throw new IllegalArgumentException(
-        s"$column is not in $table's schema at version $v"))
+        s"$column is not in $table's schema at version ${m.version}"))
     val hashes = values.map(x => BloomSkipIndex.hashLiteral(
       org.apache.spark.sql.catalyst.expressions.Literal.create(x, dt)))
-    (keepByBlooms(table, m.files, Seq((ph, hashes))), m.files.size)
+    keepByBlooms(table, m.files, Seq((ph, hashes)))
   }
 
   /** Point-lookup read with bloom file skipping: only files whose
@@ -2577,10 +2505,8 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def readPoints(spark: SparkSession, table: String, column: String,
       values: Seq[Any], version: Option[Long] = None): DataFrame = {
-    val v = Some(version.getOrElse(versions(table).last))
-    val (kept, _) = filesForPoints(table, column, values, v)
-    if (kept.isEmpty) read(spark, table, v).limit(0)
-    else readFiles(spark, table, manifest(table, v.get), kept)
+    val m = snapshot(table, version)
+    readKept(spark, table, m, keptByPoints(table, m, column, values))
       .filter(col(column).isin(values: _*))
   }
 
@@ -2615,15 +2541,8 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def readIndexed(spark: SparkSession, table: String,
       version: Option[Long] = None): DataFrame = {
-    val v = version.getOrElse {
-      val vs = versions(table)
-      require(vs.nonEmpty, s"no commits at $table")
-      vs.last
-    }
-    require(store.exists(commitsDir(table), manifestName(v)),
-      s"version $v of $table was vacuumed or never existed")
-    val m = manifest(table, v)
-    val logical = m.structType.getOrElse(readFiles(spark, table, m, m.files).schema)
+    val m = snapshot(table, version)
+    val logical = m.structType.getOrElse(readSnapshot(spark, table, m).schema)
     // the SCAN runs over the files' PHYSICAL names; the logical view
     // is a projection on top. Filters a user puts on logical columns
     // rewrite through the aliases to the scan's physical attributes,
@@ -2709,8 +2628,13 @@ class VersionedTableOps(val store: CommitStore) {
       updates: DataFrame, mergeFn: (DataFrame, DataFrame) => DataFrame): Long =
     commit(table, op) { m =>
       requireInit(table, m.version, op)
-      val merged = mergeFn(read(spark, table, Some(m.version)), updates)
-      m.copy(files = stageData(table, merged, "m"), dvs = Nil)
+      val merged = mergeFn(readSnapshot(spark, table, m), updates)
+      // the MERGED row is what lands (a partial update mixes old and
+      // new values), so that is what the constraints must hold on —
+      // the scoped paths (replacePartitionsAt, replaceFilesScoped)
+      // enforce them on the merged frame the same way
+      enforceConstraints(table, m, merged, m.constraints)
+      m.copy(files = stageData(table, m, merged, "m"), dvs = Nil)
         .withSchema(asStored(merged.schema))
     }
 
@@ -2726,9 +2650,10 @@ class VersionedTableOps(val store: CommitStore) {
       mergeFn: (DataFrame, DataFrame) => DataFrame): Long =
     commit(table, "merge") { m =>
       val init = m.version == 0
-      val snapshot = if (init) updates.limit(0) else read(spark, table, Some(m.version))
-      val merged = mergeFn(snapshot, updates)
-      m.copy(files = stageData(table, merged, if (init) "w" else "m"), dvs = Nil)
+      val merged = mergeFn(if (init) updates.limit(0) else readSnapshot(spark, table, m),
+        updates)
+      enforceConstraints(table, m, merged, m.constraints)
+      m.copy(files = stageData(table, m, merged, if (init) "w" else "m"), dvs = Nil)
         .withSchema(asStored(merged.schema))
     }
 
@@ -2797,12 +2722,12 @@ class VersionedTableOps(val store: CommitStore) {
     val updates =
       if (planDeterministic(updates0)) updates0 else updates0.localCheckpoint()
     def whole() = mergeAs(spark, table, op, updates, mergeFn)
-    if (versions(table).isEmpty || keys.isEmpty) return whole()
+    val head0 = headManifest(table)
+    if (head0.version == 0 || keys.isEmpty) return whole()
     // a partition column counted among the merge keys, with EVERY
     // file routed on it (an unrouted file may hold rows of any value
     // — a scoped read would miss them)
-    def eligibleKey(v: Long): Option[String] = {
-      val m = manifest(table, v)
+    def eligibleKey(m: Manifest): Option[String] =
       m.partitionBy
         .map(ph => m.renames.getOrElse(ph, ph))
         .find(keys.contains)
@@ -2810,12 +2735,11 @@ class VersionedTableOps(val store: CommitStore) {
           val pre = partSeg(physicalName(m.renames, lo)) + "="
           m.files.forall(_.split('/').exists(_.startsWith(pre)))
         }
-    }
     // the zone-map path handles every layout the partition path
     // cannot prove — unpartitioned tables included (round-11 headline)
-    def zoned() = mergeZonedOrWhole(spark, table, op, updates, keys, mergeFn,
+    def zoned() = mergeZonedOrWhole(spark, table, head0, op, updates, keys, mergeFn,
       maxTouched, maxAttempts)
-    val keyCol = eligibleKey(versions(table).last) match {
+    val keyCol = eligibleKey(head0) match {
       case Some(k) => k
       case None => return zoned()
     }
@@ -2835,14 +2759,15 @@ class VersionedTableOps(val store: CommitStore) {
         c.isLetterOrDigit || c == '-' || c == '_' || c == '.')))
     if (!addressable) return zoned()
     val values = raw.flatten.toSeq.sorted
+    // one head resolution per attempt, passed to the read, the merge
+    // and the conditional commit
     var attempts = 0
     while (attempts < maxAttempts) {
-      val head = versions(table).last
+      val head = if (attempts == 0) head0 else headManifest(table)
       if (eligibleKey(head).isEmpty) return whole() // layout changed under us
-      val cur = readPartitions(spark, table, keyCol, values, Some(head))
-      val merged = mergeFn(cur, updates)
-      try return replacePartitions(spark, table, merged, keyCol, values,
-        expectedBase = Some(head))
+      val merged = mergeFn(readPartitionsOf(spark, table, head, keyCol, values), updates)
+      try return replacePartitionsAt(spark, table, head, merged, keyCol, values, Nil,
+        conditional = true)
       catch { case ExpectedBaseMoved => attempts += 1 }
     }
     whole() // persistent contention: the race-safe closure path
@@ -3035,7 +2960,7 @@ class VersionedTableOps(val store: CommitStore) {
     * the scoped commit keeps the head schema), or persistent
     * commit contention. Correctness never depends on the fast path.
     */
-  private def mergeZonedOrWhole(spark: SparkSession, table: String,
+  private def mergeZonedOrWhole(spark: SparkSession, table: String, head0: Manifest,
       op: String, updates: DataFrame, keys: Seq[String],
       mergeFn: (DataFrame, DataFrame) => DataFrame,
       maxTouched: Int, maxAttempts: Int): Long = {
@@ -3047,14 +2972,14 @@ class VersionedTableOps(val store: CommitStore) {
     // Skip straight to the whole-snapshot path below the floor; the
     // O(touched-files) decade behavior only matters once the file
     // count is large enough for carrying to win.
-    if (headManifest(table).files.size < ZoneMergeFileFloor) return whole()
+    if (head0.files.size < ZoneMergeFileFloor) return whole()
     val (keyCol, probe, keyHashes) = keyProbeFor(updates, keys, maxTouched) match {
       case Some(kp) => kp
       case None => return whole()
     }
     var attempts = 0
     while (attempts < maxAttempts) {
-      val head = headManifest(table)
+      val head = if (attempts == 0) head0 else headManifest(table)
       val all = head.files
       val phys = physicalNested(head.renames, keyCol)
       val zoneTouched = filesTouchedByKey(table, all, phys, probe)
@@ -3070,14 +2995,11 @@ class VersionedTableOps(val store: CommitStore) {
           zoneTouched
         else keepByBlooms(table, zoneTouched, Seq((phys, keyHashes)))
       if (touched.size >= all.size) return whole()
-      val cur =
-        if (touched.isEmpty) read(spark, table, Some(head.version)).limit(0)
-        else readFiles(spark, table, head, touched)
-      val merged = mergeFn(cur, updates)
+      val merged = mergeFn(readKept(spark, table, head, touched), updates)
       val headSchema = schemaOf(spark, table, head)
       if (asStored(merged.schema).fields.map(f => (f.name, f.dataType)).toSet !=
           headSchema.fields.map(f => (f.name, f.dataType)).toSet) return whole()
-      try return replaceFilesScoped(spark, table, op, merged, touched.toSet, head.version)
+      try return replaceFilesScoped(spark, table, head, op, merged, touched.toSet)
       catch { case ExpectedBaseMoved => attempts += 1 }
     }
     whole()
@@ -3085,24 +3007,20 @@ class VersionedTableOps(val store: CommitStore) {
 
   /** REPLACE a named file subset with `df`'s rows in one conditional
     * commit — [[replacePartitions]]' zone-map twin, the publish step
-    * of [[mergeZonedOrWhole]]. The caller derived `df` from
-    * `expectedBase` OUTSIDE the commit closure, so a moved head must
-    * refuse (publishing would silently drop a racing commit's rows in
-    * the replaced files); the cheap pre-check refuses BEFORE staging.
-    * Carried files keep their deletion-vector entries (still live);
-    * entries naming replaced files become inert — the same carry rule
-    * as the COW mutations. Schema is the head's by construction (the
+    * of [[mergeZonedOrWhole]]. The caller derived `df` from `head`
+    * OUTSIDE the commit closure, so a moved head must refuse
+    * (publishing would silently drop a racing commit's rows in the
+    * replaced files). Carried files keep their deletion-vector
+    * entries (still live); entries naming replaced files become inert
+    * — the same carry rule as the COW mutations. Schema is the head's by construction (the
     * caller verified the merged frame matches it).
     */
-  private def replaceFilesScoped(spark: SparkSession, table: String,
-      op: String, df: DataFrame, replaced: Set[String],
-      expectedBase: Long): Long = {
-    val head = headManifest(table)
-    if (head.version != expectedBase) throw ExpectedBaseMoved
-    enforceConstraints(table, df, head.constraints)
-    val staged = stageData(table, df, "mz")
+  private def replaceFilesScoped(spark: SparkSession, table: String, head: Manifest,
+      op: String, df: DataFrame, replaced: Set[String]): Long = {
+    enforceConstraints(table, head, df, head.constraints)
+    val staged = stageData(table, head, df, "mz")
     commit(table, op) { m =>
-      if (m.version != expectedBase) throw ExpectedBaseMoved
+      if (m.version != head.version) throw ExpectedBaseMoved
       requireInit(table, m.version, "mergeKeyed")
       requireRenamesUnchanged(table, m, head.renames)
       enforceLate(spark, table, m, head.constraints, staged)
@@ -3167,9 +3085,9 @@ class VersionedTableOps(val store: CommitStore) {
     */
   def delete(spark: SparkSession, table: String, cond: Column): Long =
     try commit(table, "delete") { m =>
-      planDelete(spark, table, m, cond).getOrElse(throw NoopMutation)
+      planDelete(spark, table, m, cond).getOrElse(throw Unchanged(m.version))
     }
-    catch { case NoopMutation => versions(table).last }
+    catch { case Unchanged(base) => base }
 
   /** The COW rewrite plan of a predicate DELETE against `base`: the
     * next manifest, or None when the predicate provably or actually
@@ -3197,7 +3115,7 @@ class VersionedTableOps(val store: CommitStore) {
     // as a spurious match against the raw file stats.
     if (dvs.nonEmpty && part.filter(coalesce(cond, lit(false))).isEmpty)
       return None
-    val staged = stageData(table, part.filter(!coalesce(cond, lit(false))), "d")
+    val staged = stageData(table, base, part.filter(!coalesce(cond, lit(false))), "d")
     val stagedRows = statsRows(table, staged)
     if (dvs.isEmpty && stagedRows >= 0 &&
         stagedRows == statsRows(table, touched)) {
@@ -3251,17 +3169,17 @@ class VersionedTableOps(val store: CommitStore) {
       requireInit(table, base.version, "delete")
       val schema = schemaOf(spark, table, base)
       val (touched, _) = cowSplit(spark, table, base, cond)
-      if (touched.isEmpty) throw NoopMutation
+      if (touched.isEmpty) throw Unchanged(base.version)
       // existing DVs are already subtracted here, so a re-delete of
       // an already-deleted row can never double-write its position
       val hits = readFilesWithPos(spark, table, base, touched)
         .filter(coalesce(cond, lit(false)))
         .select(col(DvFileCol).as("file"), col(DvPosCol).as("pos"))
-      val dvNew = stageData(table, hits, "dv")
-      if (dvNew.isEmpty) throw NoopMutation // matched nothing
+      val dvNew = stageData(table, base, hits, "dv")
+      if (dvNew.isEmpty) throw Unchanged(base.version) // matched nothing
       base.copy(dvs = base.dvs ++ dvNew).withSchema(schema)
     }
-    catch { case NoopMutation => versions(table).last }
+    catch { case Unchanged(base) => base }
 
   /** Predicate UPDATE as a commit: rows where `cond` is TRUE get each
     * `set` column replaced by its expression (evaluated against the
@@ -3274,9 +3192,9 @@ class VersionedTableOps(val store: CommitStore) {
   def update(spark: SparkSession, table: String, cond: Column,
       set: Seq[(String, Column)]): Long =
     try commit(table, "update") { m =>
-      planUpdate(spark, table, m, cond, set).getOrElse(throw NoopMutation)
+      planUpdate(spark, table, m, cond, set).getOrElse(throw Unchanged(m.version))
     }
-    catch { case NoopMutation => versions(table).last }
+    catch { case Unchanged(base) => base }
 
   /** The COW rewrite plan of a predicate UPDATE against `base` —
     * [[planDelete]]'s update twin, shared by [[update]] and
@@ -3304,8 +3222,8 @@ class VersionedTableOps(val store: CommitStore) {
     // evaluated on the UPDATED columns would miss exactly the rows
     // whose update moved them out of the predicate; untouched rows
     // satisfied the constraints when they were written
-    enforceConstraints(table, updated, base.constraints)
-    val staged = stageData(table, updated, "m")
+    enforceConstraints(table, base, updated, base.constraints)
+    val staged = stageData(table, base, updated, "m")
     Some(base.copy(files = carried ++ staged).withSchema(schema))
   }
 
@@ -3324,20 +3242,20 @@ class VersionedTableOps(val store: CommitStore) {
       val schema = schemaOf(spark, table, base)
       val setMap = validateAssignments(spark, table, schema, set)
       val (touched, _) = cowSplit(spark, table, base, cond)
-      if (touched.isEmpty) throw NoopMutation
+      if (touched.isEmpty) throw Unchanged(base.version)
       val hit = readFilesWithPos(spark, table, base, touched)
         .filter(coalesce(cond, lit(false)))
         .localCheckpoint() // one scan feeds both the DV and the images
-      if (hit.isEmpty) throw NoopMutation
+      if (hit.isEmpty) throw Unchanged(base.version)
       val updated = hit.select(schema.fieldNames.map(c =>
         setMap.get(c).map(_.as(c)).getOrElse(col(c))): _*)
-      enforceConstraints(table, updated, base.constraints)
-      val dvNew = stageData(table,
+      enforceConstraints(table, base, updated, base.constraints)
+      val dvNew = stageData(table, base,
         hit.select(col(DvFileCol).as("file"), col(DvPosCol).as("pos")), "dv")
-      val staged = stageData(table, updated, "a")
+      val staged = stageData(table, base, updated, "a")
       base.copy(files = base.files ++ staged, dvs = base.dvs ++ dvNew).withSchema(schema)
     }
-    catch { case NoopMutation => versions(table).last }
+    catch { case Unchanged(base) => base }
 
   // ===== catalog: MULTI-TABLE atomic commits =====================
 
@@ -3401,8 +3319,7 @@ class VersionedTableOps(val store: CommitStore) {
     // retry-fresh base, so they stage inside the loop. id-mode members
     // stage under an EXTENDED map (fresh ids for new columns) that the
     // member manifest records, guarded against a concurrent map change.
-    val stagedAppends: Map[String, (Seq[String], Map[String, String],
-        Option[Map[String, String]])] = writes.collect {
+    val stagedAppends = writes.collect {
       case CatAppend(table, df) =>
         val head = headManifest(table)
         require(head.version > 0,
@@ -3414,12 +3331,10 @@ class VersionedTableOps(val store: CommitStore) {
             s"append has ${f.dataType.simpleString}"))
         require(conflicts.isEmpty,
           s"append schema conflicts with $table head: ${conflicts.mkString("; ")}")
-        val idMode = head.colMap == "id"
-        if (!idMode) requireNoRevivedColumns(table, df, headSchema.fieldNames)
-        enforceConstraints(table, df, head.constraints)
-        val renExt = if (idMode)
-          Some(idExtend(head.renames, df.columns, retireAbsent = false)) else None
-        table -> ((stageData(table, df, "m", renFor = renExt), head.renames, renExt))
+        if (head.colMap != "id") requireNoRevivedColumns(table, head, df, headSchema.fieldNames)
+        enforceConstraints(table, head, df, head.constraints)
+        val layout = idLayout(head, df.columns, retireAbsent = false)
+        table -> ((stageData(table, layout, df, "m"), head.renames, layout))
     }.toMap
     writes.filterNot(_.isInstanceOf[CatAppend]).foreach { w =>
       require(versions(w.table).nonEmpty,
@@ -3432,7 +3347,8 @@ class VersionedTableOps(val store: CommitStore) {
         if (lastCatalogTxn(catalog, app).exists(_ >= ver))
           return catalogVersions(catalog).last // race: the replayer lost
       }
-      val prevPins: Map[String, Long] = catalogVersions(catalog).lastOption
+      val prevHead = catalogVersions(catalog).lastOption
+      val prevPins: Map[String, Long] = prevHead
         .map(vc => catalogManifest(catalog, vc).entries.map(e => e.table -> e.tversion).toMap)
         .getOrElse(Map.empty)
       val written = writes.map { w =>
@@ -3447,23 +3363,20 @@ class VersionedTableOps(val store: CommitStore) {
           CatEntry(table, base + 1, ManifestCodec.encode(stamp(next, base + 1, op, Nil)))
         w match {
           case CatAppend(_, df) =>
-            val (staged, ren0, renExt) = stagedAppends(table)
-            renExt.foreach(_ => require(m.renames == ren0,
-              s"concurrent column-map change on $table while this " +
-                "transaction was staging; retry"))
-            entry("append", m.copy(files = m.files ++ staged,
-                renames = renExt.getOrElse(m.renames))
+            val (staged, ren0, layout) = stagedAppends(table)
+            requireRenamesUnchanged(table, m, ren0)
+            entry("append", m.copy(files = m.files ++ staged, renames = layout.renames)
               .withSchema(unionSchema(schemaOf(spark, table, m), asStored(df.schema))))
           case CatUpsert(_, updates, key) =>
-            val cur = read(spark, table, Some(base))
+            val cur = readSnapshot(spark, table, m)
             val cols = cur.columns
             val merged = cur.as("t").join(updates.as("u"), Seq(key), "full_outer")
               .select(cols.map(c =>
                 if (c == key) col(key)
                 else coalesce(col(s"u.$c"), col(s"t.$c")).as(c)): _*)
-            enforceConstraints(table, merged, m.constraints)
+            enforceConstraints(table, m, merged, m.constraints)
             // a rewrite purges deletion vectors, like upsert
-            entry("upsert", m.copy(files = stageData(table, merged, "m"), dvs = Nil)
+            entry("upsert", m.copy(files = stageData(table, m, merged, "m"), dvs = Nil)
               .withSchema(asStored(merged.schema)))
           // predicate mutations reuse the single-table COW planners and
           // EMBED the member manifest: the rewrite's rows become
@@ -3482,7 +3395,7 @@ class VersionedTableOps(val store: CommitStore) {
       }
       val carried = (prevPins -- written.map(_.table))
         .map { case (t, v) => CatEntry(t, v, "") }.toSeq.sortBy(_.table)
-      val vc = catalogVersions(catalog).lastOption.getOrElse(0L) + 1
+      val vc = prevHead.getOrElse(0L) + 1
       if (publishCatalog(catalog,
           CatalogManifest(vc, txns = txn.toSeq, entries = written ++ carried))) return vc
       attempt += 1
@@ -3641,13 +3554,7 @@ class VersionedTableOps(val store: CommitStore) {
   def catalogRepin(catalog: String, table: String): Long = {
     var attempt = 0
     while (true) {
-      multiRollForward(catalog)
-      val vs = catalogVersions(catalog)
-      require(vs.nonEmpty, s"catalog $catalog has no commits")
-      val head = vs.last
-      val entries = catalogManifest(catalog, head).entries
-      require(entries.exists(_.table == table),
-        s"$table is not a member of catalog $catalog")
+      val (head, entries) = catalogHeadFor(catalog, table)
       val cur = versions(table).last
       if (entries.find(_.table == table).get.tversion == cur) return head
       val repinned = entries.map(e =>
@@ -3670,13 +3577,7 @@ class VersionedTableOps(val store: CommitStore) {
   def catalogEvict(catalog: String, table: String): Long = {
     var attempt = 0
     while (true) {
-      multiRollForward(catalog)
-      val vs = catalogVersions(catalog)
-      require(vs.nonEmpty, s"catalog $catalog has no commits")
-      val head = vs.last
-      val entries = catalogManifest(catalog, head).entries
-      require(entries.exists(_.table == table),
-        s"$table is not a member of catalog $catalog")
+      val (head, entries) = catalogHeadFor(catalog, table)
       val kept = entries.filterNot(_.table == table).map(_.copy(manifest = ""))
       if (publishCatalog(catalog,
           CatalogManifest(head + 1, op = "evict", entries = kept))) return head + 1
@@ -3684,6 +3585,18 @@ class VersionedTableOps(val store: CommitStore) {
       require(attempt < 100, s"catalog commit contention on $catalog")
     }
     -1 // unreachable
+  }
+
+  /** The rolled-forward catalog head and its entries, `table` among
+    * them — the base of [[catalogRepin]] and [[catalogEvict]].
+    */
+  private def catalogHeadFor(catalog: String, table: String): (Long, Seq[CatEntry]) = {
+    multiRollForward(catalog)
+    val head = catalogVersions(catalog).lastOption
+    require(head.nonEmpty, s"catalog $catalog has no commits")
+    val entries = catalogManifest(catalog, head.get).entries
+    require(entries.exists(_.table == table), s"$table is not a member of catalog $catalog")
+    (head.get, entries)
   }
 
   case class VacuumReport(keptVersions: Seq[Long], droppedVersions: Seq[Long],
@@ -3751,6 +3664,18 @@ class VersionedTableOps(val store: CommitStore) {
     VacuumReport(kept, dropped, dirs, bytes)
   }
 }
+
+/** Thrown by a commit plan with nothing to publish — a mutation that
+  * changes NOTHING, or a txn write whose watermark is already
+  * applied — carrying the `base` version the plan saw. The entry
+  * point returns that version instead of publishing a byte-identical
+  * version (a no-op commit would gratuitously kill every streaming
+  * consumer of an otherwise append-only table and pollute history);
+  * never a later head, which may hold a racing commit the plan
+  * never saw.
+  */
+private final case class Unchanged(base: Long) extends Exception
+  with scala.util.control.NoStackTrace
 
 /** One member-table write inside a multi-table transaction. */
 sealed trait CatalogWrite { def table: String }

@@ -41,8 +41,8 @@ import org.apache.spark.sql.types._
   *    ordering agree (see [[VersionedTableOps.filesForRangeString]]).
   */
 class ZoneMapFileIndex(spark: SparkSession, ops: VersionedTableOps,
-    table: String, version: Long, relFiles: Seq[String],
-    dataSchema: StructType) extends FileIndex {
+    table: String, relFiles: Seq[String], dataSchema: StructType,
+    bloomDecl: Set[String]) extends FileIndex {
 
   // resolved once: the snapshot is immutable, the statuses are stable
   private val statusByRel: Seq[(String, FileStatus)] = relFiles.map { f =>
@@ -63,11 +63,6 @@ class ZoneMapFileIndex(spark: SparkSession, ops: VersionedTableOps,
 
   override def sizeInBytes: Long = statusByRel.map(_._2.getLen).sum
 
-  // the version's bloom declaration, resolved once like the statuses;
-  // probed only when an equality conjunct names a declared column
-  private lazy val bloomDecl: Set[String] =
-    ops.manifest(table, version).bloomBy.map(_._1).toSet
-
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
     val (num, str, nul, pts) = ZoneMapFilters.constraints(dataFilters)
@@ -75,8 +70,9 @@ class ZoneMapFileIndex(spark: SparkSession, ops: VersionedTableOps,
       if (num.isEmpty && str.isEmpty && nul.isEmpty) relFiles
       else ops.keepByZoneMaps(table, relFiles, num, str, nul)
     // bloom skipping composes AFTER the zone maps: sidecars are read
-    // only for interval survivors, and only for declared columns
-    // (filter names here are physical — the scan's schema is)
+    // only for interval survivors, and only for the columns the
+    // snapshot declares (`bloomDecl`, physical names — like the
+    // filter names here, since the scan's schema is physical)
     val probes = pts.collect { case (c, lits) if bloomDecl.contains(c) =>
       (c, lits.map(BloomSkipIndex.hashLiteral)) }
     val kept =

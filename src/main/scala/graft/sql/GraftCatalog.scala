@@ -148,10 +148,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
 
   override def loadTable(ident: Identifier): Table = {
     val path = tablePath(ident)
+    // pin the head NOW: every scan of this statement sees one snapshot;
     // a head-dropped table is gone from SQL (tombstone, round 12)
-    if (!isTable(path)) throw new NoSuchTableException(ident)
-    // pin the head NOW: every scan of this statement sees one snapshot
-    new GraftSqlTable(ops, path, ops.versions(path).last, ident)
+    val head = ops.versions(path).lastOption.map(v => ops.snapshot(path, Some(v)))
+      .filter(_.op != "drop_table")
+      .getOrElse(throw new NoSuchTableException(ident))
+    new GraftSqlTable(ops, path, head.version, ident)
   }
 
   /** `VERSION AS OF <v>` — the SQL twin of `read(…, Some(v))`. */

@@ -122,6 +122,27 @@ abstract class BloomIndexBattery(backend: String, ops: VersionedTableOps)
     assert(scannedFiles(conj) < all / 2)
   }
 
+  test(s"[$backend] readIndexed: a pinned frame plans equality filters after vacuum drops its manifest") {
+    val t = fresh("vacuumed-pin")
+    scattered(t)
+    ops.setBloomIndex(spark, t, Seq(("k", 0.001)))
+    val v = ops.versions(t).last
+    val pinned = ops.readIndexed(spark, t, Some(v))
+    // a later append carries v's files forward, so the vacuum keeps
+    // them while it drops v's manifest
+    ops.append(spark, t, spark.range(100000, 100010).select(col("id").as("k"))
+      .withColumn("s", lit("late")))
+    ops.vacuum(t, retain = 1, graceMs = 0)
+    assert(!ops.versions(t).contains(v), "v's manifest is vacuumed")
+    assert(pinned.filter(col("k").between(1230L, 1239L)).count() === 10,
+      "a range filter plans from the frame's snapshot")
+    val eq = pinned.filter(col("k") === 1234L)
+    assert(eq.collect().map(_.getLong(0)).toSeq === Seq(1234L),
+      "an equality filter plans from the frame's snapshot, not its vacuumed manifest")
+    assert(scannedFiles(eq) < scannedFiles(pinned) / 2,
+      "the frame's bloom declaration still prunes")
+  }
+
   test(s"[$backend] appends self-index; pre-declaration files keep conservatively") {
     val t = fresh("carry")
     scattered(t)

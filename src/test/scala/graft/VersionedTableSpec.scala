@@ -767,6 +767,24 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
     val report = ops.vacuum(t, retain = 1, graceMs = 0)
     assert(report.deletedDirs > 0, "vacuum must reclaim the pre-compaction stages")
     assert(ops.read(spark, t).count() === 180, "post-vacuum head intact")
+    // every version accessor refuses the vacuumed version with the one
+    // message `read` gives, never a raw missing-file error
+    val gone = Some(vDrop)
+    Seq[(String, () => Any)](
+      "read" -> (() => ops.read(spark, t, gone)),
+      "rowCount" -> (() => ops.rowCount(spark, t, gone)),
+      "filesForPoints" -> (() => ops.filesForPoints(t, "k", Seq(1L), gone)),
+      "filesForPartition" -> (() => ops.filesForPartition(t, "p", "P2", gone)),
+      "snapshotFiles" -> (() => ops.snapshotFiles(t, gone)),
+      "deletionVectors" -> (() => ops.deletionVectors(t, gone)),
+      "checkConstraints" -> (() => ops.checkConstraints(t, gone)),
+      "readPartition" -> (() => ops.readPartition(spark, t, "p", "P2", gone)),
+      "readPartitions" -> (() => ops.readPartitions(spark, t, "p", Seq("P2"), gone))
+    ).foreach { case (name, f) =>
+      val e = intercept[IllegalArgumentException](f())
+      assert(e.getMessage.contains(s"version $vDrop of $t was vacuumed or never existed"),
+        s"$name: ${e.getMessage}")
+    }
 
     // a shallow clone inherits the partition spec (its appends keep
     // routing, its drops keep working); dropping a partition COLUMN
