@@ -30,6 +30,11 @@ private[graft] final case class Manifest(
   def structType: Option[StructType] =
     schema.map(DataType.fromJson(_).asInstanceOf[StructType])
   def withSchema(s: StructType): Manifest = copy(schema = Some(s.json))
+  /** The partition spec under logical column names. */
+  def logicalPartitionBy: Seq[String] = partitionBy.map(ph => renames.getOrElse(ph, ph))
+  /** The bloom declaration under logical column names. */
+  def logicalBloomBy: Seq[(String, Double)] =
+    bloomBy.map { case (ph, f) => (renames.getOrElse(ph, ph), f) }
 }
 
 /** One member of a catalog version: `table` pinned at `tversion`;

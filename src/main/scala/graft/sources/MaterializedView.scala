@@ -73,11 +73,10 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
     * parameter fails loudly, 0 = unbucketed.
     */
   private def resolveBuckets(view: String, viewKey: String,
-      vView: Option[Long], param: Int): Int = {
+      vHead: Option[Manifest], param: Int): Int = {
     require(param >= 0 && param <= (1 << 20),
       s"buckets must be in [0, 2^20], got $param")
-    val stored = vView.flatMap(v =>
-      vt.lastTxn(view, bucketsApp(viewKey), upTo = Some(v))).map(_.toInt)
+    val stored = cursorOf(view, vHead, bucketsApp(viewKey)).map(_.toInt)
     stored match {
       case Some(b) =>
         require(param == 0 || param == b,
@@ -85,12 +84,30 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
             "not a refresh")
         b
       case None =>
-        require(vView.isEmpty || param == 0,
+        require(vHead.isEmpty || param == 0,
           s"view $view already has unbucketed state; bucketing is set at the " +
             "first refresh")
         param
     }
   }
+
+  /** The view's head, listed and decoded ONCE per refresh (None before
+    * its first commit). Cursor AND state are pinned to this one view
+    * snapshot: a racing refresher that commits between a cursor read
+    * and a state read would otherwise hand us ITS post-delta state
+    * while we still merge from OUR older cursor — double-applying its
+    * delta. Pinned, the merge is (state@head) + delta(cursor@head ->
+    * source head), which is correct under any interleaving; the txn
+    * watermark then makes whichever racer lands second a no-op or a
+    * correct re-derivation, never a double count. A caught-up refresh
+    * returns this head's version, the one whose cursor it checked.
+    */
+  private def viewHead(view: String): Option[Manifest] =
+    vt.versions(view).lastOption.map(v => vt.snapshot(view, Some(v)))
+
+  /** `appId`'s watermark as of the resolved view head. */
+  private def cursorOf(view: String, vHead: Option[Manifest], appId: String): Option[Long] =
+    vHead.flatMap(vt.txnAt(view, _, appId))
 
   /** The state without the internal bucket column (present only on
     * bucketed views; a no-op otherwise).
@@ -144,18 +161,9 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
       buckets: Int = 0,
       derive: Seq[(String, org.apache.spark.sql.Column)] = Nil): Long = {
     val head = vt.versions(source).last
-    // cursor AND state are pinned to ONE view snapshot (vView): a
-    // racing refresher that commits between our cursor read and our
-    // state read would otherwise hand us ITS post-delta state while
-    // we still merge from OUR older cursor — double-applying its
-    // delta. Pinned, the merge is (state@vView) + delta(cursor@vView
-    // -> head), which is correct under any interleaving; the txn
-    // watermark then makes whichever racer lands second a no-op or a
-    // correct re-derivation, never a double count.
-    val vView = vt.versions(view).lastOption
-    val cursor = vView.flatMap(v =>
-      vt.lastTxn(view, appIdFor(viewKey), upTo = Some(v)))
-    if (cursor.exists(_ >= head)) return vt.versions(view).last
+    val vHead = viewHead(view)
+    val cursor = cursorOf(view, vHead, appIdFor(viewKey))
+    if (cursor.exists(_ >= head)) return vHead.get.version
     val delta0 = cursor match {
       case Some(v) => vt.changesBetween(spark, source, v, head)
       case None => // first refresh: the head snapshot, all inserts
@@ -164,9 +172,8 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
     }
     val delta1 = where.fold(delta0)(w => delta0.filter(expr(w)))
     val delta = derive.foldLeft(delta1) { case (d, (n, c)) => d.withColumn(n, c) }
-    foldDelta(spark, view, vView, cursor.isDefined, delta, keyCols, sumCols,
-      Seq(appIdFor(viewKey) -> head),
-      resolveBuckets(view, viewKey, vView, buckets), bucketsApp(viewKey))
+    foldDelta(spark, view, vHead, cursor.isDefined, delta, keyCols, sumCols,
+      Seq(appIdFor(viewKey) -> head), buckets, viewKey)
   }
 
   /** A JOINED view definition — the delta-join (DBToaster) shape:
@@ -205,16 +212,16 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
     val appR = s"${appIdFor(viewKey)}:right"
     val headL = vt.versions(left).last
     val headR = vt.versions(right).last
-    val vView = vt.versions(view).lastOption
-    val curL = vView.flatMap(v => vt.lastTxn(view, appL, upTo = Some(v)))
-    val curR = vView.flatMap(v => vt.lastTxn(view, appR, upTo = Some(v)))
+    val vHead = viewHead(view)
+    val curL = cursorOf(view, vHead, appL)
+    val curR = cursorOf(view, vHead, appR)
     if (curL.exists(_ >= headL) && curR.exists(_ >= headR))
-      return vt.versions(view).last
+      return vHead.get.version
     // a view with commits but no join-cursor pair was maintained by
     // something else (e.g. the single-source refresh) — silently
     // adopting its state would merge deltas into an unrelated
     // aggregate; only an EMPTY view can start a join history
-    require(vView.isEmpty || (curL.isDefined && curR.isDefined),
+    require(vHead.isEmpty || (curL.isDefined && curR.isDefined),
       s"view $view has commits without this viewKey's cursor pair — " +
         "not (yet) a refreshJoin view; start from an empty view table")
     val lCols = vt.read(spark, left, Some(headL)).columns.toSet
@@ -246,9 +253,8 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
     // (e.g. the non-null indicator whose signed sum is a join view's
     // AVG denominator)
     val delta = derive.foldLeft(delta1) { case (d, (n, c)) => d.withColumn(n, c) }
-    foldDelta(spark, view, vView, curL.isDefined, delta, keyCols, sumCols,
-      Seq(appL -> headL, appR -> headR),
-      resolveBuckets(view, viewKey, vView, buckets), bucketsApp(viewKey))
+    foldDelta(spark, view, vHead, curL.isDefined, delta, keyCols, sumCols,
+      Seq(appL -> headL, appR -> headR), buckets, viewKey)
   }
 
   /** The N-ARY chain generalization of [[refreshJoin]]:
@@ -295,11 +301,11 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
     val n = sources.size
     val apps = sources.indices.map(i => s"${appIdFor(viewKey)}:$i")
     val heads = sources.map(s => vt.versions(s).last)
-    val vView = vt.versions(view).lastOption
-    val curs = apps.map(a => vView.flatMap(v => vt.lastTxn(view, a, upTo = Some(v))))
+    val vHead = viewHead(view)
+    val curs = apps.map(cursorOf(view, vHead, _))
     if (curs.zip(heads).forall { case (c, h) => c.exists(_ >= h) })
-      return vt.versions(view).last
-    require(vView.isEmpty || curs.forall(_.isDefined),
+      return vHead.get.version
+    require(vHead.isEmpty || curs.forall(_.isDefined),
       s"view $view has commits without this viewKey's full cursor set — " +
         "not (yet) a refreshJoinChain view; start from an empty view table")
     // column disjointness: a shared non-key column would silently
@@ -341,9 +347,8 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
     // — expression sums (e.g. a*b across chain members) maintain with
     // no new state machinery
     val delta = derive.foldLeft(delta1) { case (d, (n, c)) => d.withColumn(n, c) }
-    foldDelta(spark, view, vView, !first, delta, keyCols, sumCols,
-      apps.zip(heads),
-      resolveBuckets(view, viewKey, vView, buckets), bucketsApp(viewKey))
+    foldDelta(spark, view, vHead, !first, delta, keyCols, sumCols,
+      apps.zip(heads), buckets, viewKey)
   }
 
   /** The chain view's per-source freshness, in source order. */
@@ -402,15 +407,26 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
       sumCols.map(c => col(s"mv_sum_mv_sum_$c").as(s"mv_sum_$c"))): _*)
   }
 
+  /** A per-row refusal of a refresh: delta rows where `bad` holds are
+    * counted inside the fold's delta aggregation, and a refresh that
+    * saw any refuses with `msg(count)` before it publishes.
+    */
+  private case class RowGuard(bad: org.apache.spark.sql.Column, msg: Long => String)
+
   /** Guard, aggregate and merge a SIGNED delta (`_change` column:
-    * insert/delete) into the view's pinned state, committing with the
-    * given watermarks — the shared core of every refresh flavor.
+    * insert/delete) into the view's pinned state (`vHead`), committing
+    * with the given watermarks — the shared core of every refresh
+    * flavor. The delta is evaluated once: its O(groups) aggregate
+    * carries the guards' counts, which the driver checks before the
+    * merge.
     */
   private def foldDelta(spark: SparkSession, view: String,
-      vView: Option[Long], hasState: Boolean, delta: DataFrame,
+      vHead: Option[Manifest], hasState: Boolean, delta: DataFrame,
       keyCols: Seq[String], sumCols: Seq[String],
-      txns: Seq[(String, Long)], buckets: Int = 0,
-      bucketsAppId: String = ""): Long = {
+      txns: Seq[(String, Long)], bucketsParam: Int, viewKey: String,
+      rowGuards: Seq[RowGuard] = Nil): Long = {
+    val buckets = resolveBuckets(view, viewKey, vHead, bucketsParam)
+    val vView = vHead.map(_.version)
     // OVERFLOW GUARDS (round-7 advisory): the per-row cast to the
     // fixed sum type silently yields NULL under non-ANSI semantics
     // when |value| >= 10^24 — sum() would skip the NULL while
@@ -419,9 +435,9 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
     //  1. statically reject source types that cannot fit SumType
     //     (wide decimals; non-numeric columns);
     //  2. for float/double columns (the only in-range types whose
-    //     values can exceed 10^24), probe the DELTA for cast-overflow
-    //     rows — one cheap aggregate over rows the refresh scans
-    //     anyway — and fail loudly (integers/longs fit by range);
+    //     values can exceed 10^24), count the DELTA's cast-overflow
+    //     rows as a guard of the delta aggregation and fail loudly
+    //     (integers/longs fit by range);
     //  3. the group/merge re-casts raise instead of nulling (below).
     sumCols.foreach { c =>
       delta.schema(c).dataType match {
@@ -438,23 +454,22 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
       case DoubleType | FloatType => true
       case _ => false
     })
-    if (floaty.nonEmpty) {
-      // try_cast: NULL on overflow under BOTH ANSI and legacy modes —
-      // the probe itself must never throw mid-job, it must count
-      val probe = delta.agg(
-        count(lit(1)).as("__n"),
-        floaty.map(c => sum(when(col(c).isNotNull && col(c).try_cast(SumType).isNull,
-          1L).otherwise(0L)).as(c)): _*).head
-      floaty.zipWithIndex.foreach { case (c, i) =>
-        require(probe.getLong(i + 1) == 0L,
-          s"sum column $c: ${probe.getLong(i + 1)} delta rows overflow " +
-            s"${SumType.simpleString}; refusing a silently-divergent view")
-      }
-    }
+    // try_cast: NULL on overflow under BOTH ANSI and legacy modes —
+    // the count itself must never throw mid-job
+    val guards = floaty.map(c => RowGuard(col(c).isNotNull && col(c).try_cast(SumType).isNull,
+      n => s"sum column $c: $n delta rows overflow ${SumType.simpleString}; " +
+        "refusing a silently-divergent view")) ++ rowGuards
+    val guardNames = guards.indices.map(i => s"__guard_$i")
+    val guardAggs = guards.zip(guardNames).map { case (g, n) =>
+      sum(when(g.bad, 1L).otherwise(0L)).as(n) }
+    // a group holding a guarded row is refused by its count, not by the
+    // group-total raise below
+    val unguarded = guards.map(g => sum(when(g.bad, 1L).otherwise(0L)) === 0L)
+      .reduceOption(_ && _).getOrElse(lit(true))
     val del = col("_change") === "delete"
-    // per-row try_cast: the probe above proved no row overflows, so a
-    // NULL here can only be a source NULL — and under ANSI mode a
-    // plain cast of a probe-passed row cannot throw either
+    // per-row try_cast: a row that overflows is counted by its guard
+    // and refuses the refresh, so in a published fold a NULL here can
+    // only be a source NULL
     val aggs =
       sum(when(del, lit(-1L)).otherwise(lit(1L))).cast(LongType).as("mv_count") +:
         sumCols.map { c =>
@@ -462,12 +477,28 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
           // the sum itself widens to DECIMAL(38,4); a GROUP total past
           // SumType's range must raise, not null (a legitimate NULL is
           // s itself null: every value in the group was NULL)
-          when(s.isNotNull && s.try_cast(SumType).isNull,
+          when(s.isNotNull && s.try_cast(SumType).isNull && unguarded,
             raise_error(lit(s"materialized-view sum $c overflowed " +
               s"${SumType.simpleString} in a delta group")))
             .otherwise(s.try_cast(SumType)).as(s"mv_sum_$c")
         }
-    val deltaAgg = delta.groupBy(keyCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val aggregated = delta.groupBy(keyCols.map(col): _*)
+      .agg(aggs.head, aggs.tail ++ guardAggs: _*)
+    // materialized once when it is read more than once — by the guard
+    // check (driver-side, before anything is staged) and by the
+    // bucketed path's touched-bucket discovery; otherwise the merge
+    // consumes the aggregate directly. The guard check is the first
+    // action on the lazy checkpoint, so it also materializes it
+    val deltaAgg = if (guards.isEmpty && buckets == 0) aggregated else {
+      val pinned = aggregated.localCheckpoint(eager = guards.isEmpty)
+      if (guards.nonEmpty) {
+        val counts = pinned.select(guardNames.map(col): _*).rdd
+          .map(r => guardNames.indices.map(r.getLong))
+          .fold(guardNames.map(_ => 0L))((a, b) => a.zip(b).map(p => p._1 + p._2))
+        guards.zip(counts).foreach { case (g, n) => require(n == 0L, g.msg(n)) }
+      }
+      pinned.drop(guardNames: _*)
+    }
     val valCols = "mv_count" +: sumCols.map(c => s"mv_sum_$c")
     def mergeWith(state: DataFrame): DataFrame = state.as("s")
       .join(deltaAgg.as("d"), nsCond("s", "d", keyCols), "full_outer")
@@ -496,7 +527,7 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
     // those partitions — untouched state carries by file reference
     require(!keyCols.contains(BucketCol) && !sumCols.contains(BucketCol),
       s"view columns collide with the internal bucket column $BucketCol")
-    val bTxns = txns :+ (bucketsAppId -> buckets.toLong)
+    val bTxns = txns :+ (bucketsApp(viewKey) -> buckets.toLong)
     val bc = bucketExpr(keyCols, buckets)
     if (!hasState)
       return vt.overwritePartitioned(spark, view,
@@ -542,10 +573,9 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
       buckets: Int = 0): Long = {
     import org.apache.spark.sql.types.{ByteType, IntegerType, ShortType}
     val head = vt.versions(source).last
-    val vView = vt.versions(view).lastOption
-    val cursor = vView.flatMap(v =>
-      vt.lastTxn(view, appIdFor(viewKey), upTo = Some(v)))
-    if (cursor.exists(_ >= head)) return vt.versions(view).last
+    val vHead = viewHead(view)
+    val cursor = cursorOf(view, vHead, appIdFor(viewKey))
+    if (cursor.exists(_ >= head)) return vHead.get.version
     val delta0 = cursor match {
       case Some(v) => vt.changesBetween(spark, source, v, head)
       case None => vt.read(spark, source, Some(head))
@@ -571,34 +601,30 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
             "exact types (decimal scale <= 2 or integral) — cast at ingestion")
       }
     }
-    if (integrals.nonEmpty) {
-      // STRICT bound: |v| < 10^12 — v = ±10^12 itself squares to
-      // exactly 10^24, which needs 25 integer digits and does NOT fit
-      // DECIMAL(28,4)'s 24 (the decimal rule above is strict the same
-      // way: <= 12 integer digits means < 10^12)
-      val lim = 1000000000000L
-      val probe = delta1.agg(count(lit(1)).as("__n"),
-        integrals.map(c => sum(when(abs(col(c)) >= lim, 1L).otherwise(0L)).as(c)): _*)
-        .head
-      integrals.zipWithIndex.foreach { case (c, i) =>
-        require(probe.getLong(i + 1) == 0L,
-          s"stats column $c: ${probe.getLong(i + 1)} delta rows at or past |v| = 1e12; " +
-            "their squares cannot be held exactly") }
-    }
+    // STRICT bound: |v| < 10^12 — v = ±10^12 itself squares to
+    // exactly 10^24, which needs 25 integer digits and does NOT fit
+    // DECIMAL(28,4)'s 24 (the decimal rule above is strict the same
+    // way: <= 12 integer digits means < 10^12). Counted inside the
+    // fold's one delta aggregation; such a row's square is left NULL,
+    // never computed, and the refresh refuses before publishing
+    val lim = 1000000000000L
+    val guards = integrals.map(c => RowGuard(abs(col(c)) >= lim, n =>
+      s"stats column $c: $n delta rows at or past |v| = 1e12; " +
+        "their squares cannot be held exactly"))
     // squares and per-column NON-NULL counts ride as ADDITIONAL
-    // abelian sums ((28,4)×(28,4) squares of probed inputs are exact
+    // abelian sums ((28,4)×(28,4) squares of guarded inputs are exact
     // and fit the final (28,4) state; the nn count gives the SQL
     // AVG/VAR denominator — NULLs contribute to neither numerator nor
     // denominator, matching the aggregate a recompute would run)
-    val delta = cols.foldLeft(delta1)((d, c) => d
-      .withColumn(sqName(c),
-        (col(c).cast(SumType) * col(c).cast(SumType)).cast(SumType))
-      .withColumn(nnName(c),
-        when(col(c).isNotNull, lit(1L)).otherwise(lit(null).cast("long"))))
-    foldDelta(spark, view, vView, cursor.isDefined, delta,
+    val delta = cols.foldLeft(delta1) { (d, c) =>
+      val sq = (col(c).cast(SumType) * col(c).cast(SumType)).cast(SumType)
+      d.withColumn(sqName(c), if (integrals.contains(c)) when(abs(col(c)) < lim, sq) else sq)
+        .withColumn(nnName(c),
+          when(col(c).isNotNull, lit(1L)).otherwise(lit(null).cast("long")))
+    }
+    foldDelta(spark, view, vHead, cursor.isDefined, delta,
       keyCols, cols ++ cols.map(sqName) ++ cols.map(nnName),
-      Seq(appIdFor(viewKey) -> head),
-      resolveBuckets(view, viewKey, vView, buckets), bucketsApp(viewKey))
+      Seq(appIdFor(viewKey) -> head), buckets, viewKey, guards)
   }
 
   private def nnName(c: String) = s"${c}_nn"
@@ -659,11 +685,11 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
       buckets: Int = 0): Long = {
     import org.apache.spark.sql.types._
     val head = vt.versions(source).last
-    val vView = vt.versions(view).lastOption
-    val b = resolveBuckets(view, viewKey, vView, buckets)
-    val cursor = vView.flatMap(v =>
-      vt.lastTxn(view, appIdFor(viewKey), upTo = Some(v)))
-    if (cursor.exists(_ >= head)) return vt.versions(view).last
+    val vHead = viewHead(view)
+    val vView = vHead.map(_.version)
+    val b = resolveBuckets(view, viewKey, vHead, buckets)
+    val cursor = cursorOf(view, vHead, appIdFor(viewKey))
+    if (cursor.exists(_ >= head)) return vHead.get.version
     val delta0 = cursor match {
       case Some(v) => vt.changesBetween(spark, source, v, head)
       case None => vt.read(spark, source, Some(head))

@@ -117,10 +117,7 @@ class VersionedTableOps(val store: CommitStore) {
     * the stats.
     */
   def bloomIndexSpec(table: String, version: Option[Long] = None): Seq[(String, Double)] =
-    logicalBlooms(snapshot(table, version))
-
-  private def logicalBlooms(m: Manifest): Seq[(String, Double)] =
-    m.bloomBy.map { case (ph, f) => (m.renames.getOrElse(ph, ph), f) }
+    snapshot(table, version).logicalBloomBy
 
   /** The table's column-mapping mode: "name" (default — physical file
     * column names are the column's FIRST logical name, rename/drop
@@ -341,7 +338,10 @@ class VersionedTableOps(val store: CommitStore) {
     * produced — the zone-map layer [[readRange]]'s file skipping
     * reads. Bounds are widened one ULP at write time so a value that
     * rounded on the double conversion can never shrink the interval
-    * and wrongly skip a file holding boundary rows.
+    * and wrongly skip a file holding boundary rows. On a table with a
+    * bloom declaration, each file's sidecars are written by the task
+    * that writes the file and published with it ([[BloomSkipIndex]]);
+    * the stage is never read back.
     *
     * `layout` is the manifest whose rename map, partition spec and
     * bloom declaration the stage follows: the commit plan's base for
@@ -370,12 +370,19 @@ class VersionedTableOps(val store: CommitStore) {
     // carries its partition segments) self-maintains. DV stages carry
     // internal (file, pos) rows and never route.
     val parts: Seq[String] = if (tag == "dv") Nil else layout.partitionBy
+    // bloom sidecars follow the table the same way: every stage of a
+    // declared table (append, COW rewrite, compact, OPTIMIZE) writes
+    // each fresh file's sidecars from the task that writes the file
+    // ([[BloomStagingFormat]]), so equality skipping self-maintains
+    // with no read-back of the stage; DV stages never index
+    val blooms: Seq[(String, Double)] = if (tag == "dv") Nil else layout.bloomBy
     val staged: Seq[String] = if (parts.isEmpty) {
-      out.write.parquet(dir.toString)
+      BloomSkipIndex.writer(out, blooms).save(dir.toString)
       val emptyParts = writeFileStats(df.sparkSession, dir)
       // zero-row part files carry no data and no stats — dropped here so
       // they can never dodge every future zone-map probe (scaladoc on
-      // writeFileStats); deleting pre-publish is safe, nothing refs them
+      // writeFileStats); deleting pre-publish is safe, nothing refs them,
+      // and their writers built no bloom sidecars
       emptyParts.foreach(n => Files.delete(dir.resolve(n)))
       ls(dir)
         .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -416,7 +423,8 @@ class VersionedTableOps(val store: CommitStore) {
             parts.map(p => col(partSeg(p))): _*)
         case None => routed
       }
-      distributed.write.partitionBy(parts.map(partSeg): _*).parquet(dir.toString)
+      BloomSkipIndex.writer(distributed, blooms)
+        .partitionBy(parts.map(partSeg): _*).save(dir.toString)
       // one _stats.json per LEAF value directory: the zone-map/row-count
       // consumers key stats by (parent dir, file name) and need no
       // structural knowledge of partitioning
@@ -432,15 +440,6 @@ class VersionedTableOps(val store: CommitStore) {
           .map(p => dir.getParent.getParent.relativize(p).toString)
       }.sorted
     }
-    // bloom sidecars follow the table like partition routing does:
-    // every stage of a declared table (append, COW rewrite, compact,
-    // OPTIMIZE) indexes its fresh files, so equality skipping
-    // self-maintains. One distributed job per stage; filters sized to
-    // the batch's largest file (exact per-file counts come from the
-    // `_stats.json` just written). DV stages never index.
-    val blooms: Seq[(String, Double)] = if (tag == "dv") Nil else layout.bloomBy
-    if (blooms.nonEmpty && staged.nonEmpty)
-      BloomSkipIndex.build(df.sparkSession, table, staged, blooms, maxRows(table, staged))
     staged
   }
 
@@ -635,7 +634,7 @@ class VersionedTableOps(val store: CommitStore) {
     }
 
   /** The largest committed row count among `files` (1 when none is
-    * known) — what bloom sidecars are sized to.
+    * known) — what back-filled bloom sidecars are sized to.
     */
   private def maxRows(table: String, files: Seq[String]): Long =
     fileRows(table, files).values.maxOption.getOrElse(1L)
@@ -1338,10 +1337,8 @@ class VersionedTableOps(val store: CommitStore) {
     * the PHYSICAL names data files carry (id mapping / renames), this
     * is the user-facing view (SQL SHOW PARTITIONS, DataFrame callers).
     */
-  def partitionColumns(table: String, version: Option[Long] = None): Seq[String] = {
-    val m = snapshot(table, version)
-    m.partitionBy.map(ph => m.renames.getOrElse(ph, ph))
-  }
+  def partitionColumns(table: String, version: Option[Long] = None): Seq[String] =
+    snapshot(table, version).logicalPartitionBy
 
   /** The distinct raw partition-segment values of one column in a
     * snapshot, sorted — metadata-only (manifest paths, no IO); the
@@ -1513,8 +1510,7 @@ class VersionedTableOps(val store: CommitStore) {
     val (specL, specR) = (mL.partitionBy, mR.partitionBy)
     require(specL.nonEmpty && specR.nonEmpty,
       s"joinPartitioned needs BOTH tables partitioned ($left: $specL, $right: $specR)")
-    val logSpecL = specL.map(ph => mL.renames.getOrElse(ph, ph))
-    val logSpecR = specR.map(ph => mR.renames.getOrElse(ph, ph))
+    val (logSpecL, logSpecR) = (mL.logicalPartitionBy, mR.logicalPartitionBy)
     val k = (1 to math.min(logSpecL.size, logSpecR.size)).reverse.find(i =>
       logSpecL.take(i) == logSpecR.take(i) &&
         logSpecL.take(i).forall(on.contains)).getOrElse(0)
@@ -1707,7 +1703,7 @@ class VersionedTableOps(val store: CommitStore) {
     * vacuum horizon (retained versions are contiguous — vacuum drops
     * the oldest first).
     */
-  private def txnAt(table: String, m: Manifest, appId: String): Option[Long] =
+  private[sources] def txnAt(table: String, m: Manifest, appId: String): Option[Long] =
     Iterator.iterate(Option(m))(_.filter(_.version > 1).flatMap(b =>
         try Some(manifest(table, b.version - 1))
         catch { case _: java.nio.file.NoSuchFileException => None }))
@@ -2431,9 +2427,9 @@ class VersionedTableOps(val store: CommitStore) {
     * `WHERE key = x` on a high-cardinality unclustered column. The
     * declaration is ONE metadata commit (files by reference, carried
     * forward by every later commit like partitionBy), and every
-    * subsequent stage indexes its fresh files inside the staging job.
+    * subsequent stage indexes its fresh files inside its write tasks.
     * With `backfill` (the default) the CURRENT snapshot's files are
-    * indexed first — one distributed job — so the declaration is
+    * indexed first — one read pass over them — so the declaration is
     * effective immediately; without it, pre-declaration files simply
     * never prune (conservative). Declaring `Nil` removes the index
     * (existing sidecars become dead bytes until their dirs vacuum).
@@ -2487,7 +2483,7 @@ class VersionedTableOps(val store: CommitStore) {
     val ph = physicalName(m.renames, column)
     require(m.bloomBy.exists(_._1 == ph),
       s"$column is not bloom-indexed on $table at version ${m.version} " +
-        s"(declared: ${logicalBlooms(m).map(_._1).mkString(", ") })")
+        s"(declared: ${m.logicalBloomBy.map(_._1).mkString(", ") })")
     val dt = m.structType.flatMap(_.fields.find(_.name == column))
       .map(_.dataType).getOrElse(throw new IllegalArgumentException(
         s"$column is not in $table's schema at version ${m.version}"))
@@ -2728,8 +2724,7 @@ class VersionedTableOps(val store: CommitStore) {
     // file routed on it (an unrouted file may hold rows of any value
     // — a scoped read would miss them)
     def eligibleKey(m: Manifest): Option[String] =
-      m.partitionBy
-        .map(ph => m.renames.getOrElse(ph, ph))
+      m.logicalPartitionBy
         .find(keys.contains)
         .filter { lo =>
           val pre = partSeg(physicalName(m.renames, lo)) + "="

@@ -495,17 +495,19 @@ class GraftSqlTable(val ops: VersionedTableOps, val path: String,
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
+  /** The pinned version's manifest, decoded once: it is immutable. */
+  private lazy val pinned = ops.snapshot(path, Some(pinnedVersion))
+
   override def properties(): util.Map[String, String] = {
     val m = new util.HashMap[String, String]()
     m.put("provider", "graft")
     m.put(TableCatalog.PROP_LOCATION, path)
     m.put("graft.version", pinnedVersion.toString)
-    val parts = ops.partitionSpec(path, Some(pinnedVersion))
-    if (parts.nonEmpty) m.put("partitionBy", parts.mkString(","))
+    if (pinned.partitionBy.nonEmpty) m.put("partitionBy", pinned.partitionBy.mkString(","))
     // surfaced so SHOW CREATE TABLE's rendered DDL round-trips the
     // bloom declaration (logical names; one fpp — the SQL surface
     // declares a single rate for the whole list)
-    val blooms = ops.bloomIndexSpec(path, Some(pinnedVersion))
+    val blooms = pinned.logicalBloomBy
     if (blooms.nonEmpty) {
       m.put("graft.bloom.columns", blooms.map(_._1).mkString(","))
       m.put("graft.bloom.fpp", blooms.head._2.toString)
@@ -513,8 +515,7 @@ class GraftSqlTable(val ops: VersionedTableOps, val path: String,
     m
   }
 
-  private lazy val partCols: Seq[String] =
-    ops.partitionColumns(path, Some(pinnedVersion))
+  private lazy val partCols: Seq[String] = pinned.logicalPartitionBy
 
   override def partitioning(): Array[Transform] =
     partCols.map(c =>

@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.sources.{CatDelete, InMemoryCommitStore, VersionedTable, VersionedTableOps}
+import graft.sql.GraftCatalog
 
 /** Per-file bloom-filter file skipping (SURVEY §2.7): equality
   * lookups on a HIGH-CARDINALITY, UNCLUSTERED column — the query the
@@ -267,6 +268,154 @@ abstract class BloomIndexBattery(backend: String, ops: VersionedTableOps)
     assert(ops.bloomIndexSpec(t) === declared)
     val (kept, tot) = ops.filesForPoints(c, "k", Seq(1234L))
     assert(kept.size < tot, s"the clone's blooms still prune (kept ${kept.size}/$tot)")
+  }
+
+  /** The `.bloom` sidecars in `dir`, by name. */
+  private def sidecarsIn(dir: java.nio.file.Path): Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(Files.list(dir))(_.iterator().asScala
+      .map(_.getFileName.toString).filter(_.endsWith(".bloom")).toSeq.sorted)
+  }
+
+  /** Runs `op` on `t` and checks every data file it added to the
+    * snapshot: beside each sits exactly one sidecar per declared
+    * column, and that sidecar holds every value of the column in the
+    * file (hashed by Spark's own `xxhash64`, the hash the probe uses).
+    * The staged directories hold no other sidecar. Returns the files
+    * `op` carried from the previous snapshot.
+    */
+  private def assertIndexed(t: String, what: String)(op: => Unit): Set[String] = {
+    val before = ops.snapshotFiles(t).toSet
+    op
+    val after = ops.snapshotFiles(t)
+    val added = after.filterNot(before.contains)
+    assert(added.nonEmpty, s"$what stages files")
+    val decl = ops.bloomIndexSpec(t).map(_._1)
+    added.foreach { f =>
+      val p = Paths.get(t, f)
+      val name = p.getFileName.toString
+      assert(sidecarsIn(p.getParent).filter(_.startsWith(name + ".")) ===
+        decl.map(c => s"$name.$c.bloom").sorted, s"$what: one sidecar per column beside $f")
+      decl.foreach { c =>
+        val filter = scala.util.Using.resource(
+          Files.newInputStream(p.resolveSibling(s"$name.$c.bloom")))(
+          org.apache.spark.util.sketch.BloomFilter.readFrom)
+        val hashes = spark.read.parquet(p.toString).select(xxhash64(col(c)))
+          .collect().map(_.getLong(0))
+        assert(hashes.nonEmpty, s"$what: $f holds rows")
+        assert(hashes.forall(filter.mightContainLong),
+          s"$what: the $c sidecar of $f holds every value of its file")
+      }
+    }
+    added.groupBy(f => Paths.get(t, f).getParent).foreach { case (dir, fs) =>
+      assert(sidecarsIn(dir).size === fs.size * decl.size,
+        s"$what: $dir holds sidecars of its staged files only")
+    }
+    after.filter(before.contains).toSet
+  }
+
+  test(s"[$backend] every staging path writes one sidecar per staged file, in its write tasks") {
+    val root = fresh("stagers")
+    val t = s"$root/db/t"
+    val catalog = s"graftbloom$backend"
+    GraftCatalog.setOps(catalog, ops)
+    spark.conf.set(s"spark.sql.catalog.$catalog", "graft.sql.GraftCatalog")
+    spark.conf.set(s"spark.sql.catalog.$catalog.root", root)
+    def rows(lo: Long, hi: Long, s: Column) = spark.range(lo, hi)
+      .select(col("id").as("k"), s.as("s"), (col("id") % 7).as("v"))
+    for (era <- 0 to 2) {
+      val df = rows(0, 3000, concat(lit("key-"), col("id").cast("string")))
+        .filter(col("k") % 3 === era).repartition(4, col("s"))
+      if (era == 0) ops.overwrite(spark, t, df) else ops.append(spark, t, df)
+    }
+    ops.setBloomIndex(spark, t, Seq(("k", 0.001), ("s", 0.01)))
+    assertIndexed(t, "append") {
+      ops.append(spark, t, rows(3000, 3100, lit("appended")).repartition(2))
+    }
+    assertIndexed(t, "COW delete") { ops.delete(spark, t, col("k") === 1234L) }
+    assertIndexed(t, "updateMoR") {
+      ops.updateMoR(spark, t, col("k") === 1236L, Seq("s" -> lit("mor")))
+    }
+    val carried = assertIndexed(t, "scoped upsert") {
+      ops.upsert(spark, t, rows(0, 3, lit("upd")).withColumn("k", col("k") * 3 + 1), "k")
+    }
+    assert(carried.nonEmpty, "the upsert took the scoped path")
+    assertIndexed(t, "SQL UPDATE") {
+      spark.sql(s"UPDATE $catalog.db.t SET s = 'sql' WHERE k = 1239")
+    }
+    assertIndexed(t, "SQL MERGE") {
+      spark.sql(
+        s"""MERGE INTO $catalog.db.t t
+           |USING (SELECT id AS k, 'merged' AS s, id % 7 AS v FROM range(2998, 3003)) s
+           |ON t.k = s.k
+           |WHEN MATCHED THEN UPDATE SET *
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    }
+    assertIndexed(t, "OPTIMIZE zorder") {
+      ops.optimize(spark, t, Seq("k", "v"), nFiles = 4, zorder = true)
+    }
+    assertIndexed(t, "compact") { ops.compact(spark, t) }
+    assert(ops.snapshotFiles(t).size === 1)
+    val kept = assertIndexed(t, "whole-table upsert") {
+      ops.upsert(spark, t, rows(10, 13, lit("whole")), "k")
+    }
+    assert(kept.isEmpty, "the upsert re-staged the whole table")
+    val got = ops.read(spark, t)
+    assert(got.count() === 3099L, "every write landed exactly once")
+    assert(ops.readPoints(spark, t, "k", Seq(11L)).collect().map(_.getString(1)).toSeq ===
+      Seq("whole"))
+  }
+
+  test(s"[$backend] a partitioned append writes its sidecars beside each leaf file") {
+    val t = fresh("parts-append")
+    ops.overwritePartitioned(spark, t, spark.range(0, 400).select(col("id").as("k"),
+      (col("id") % 4).cast("string").as("p")), Seq("p"))
+    ops.setBloomIndex(spark, t, Seq(("k", 0.001)))
+    assertIndexed(t, "partitioned append") {
+      ops.append(spark, t, spark.range(400, 800).select(col("id").as("k"),
+        (col("id") % 4).cast("string").as("p")).repartition(3, col("k")))
+    }
+  }
+
+  test(s"[$backend] DV stages and dropped zero-row files leave no sidecar") {
+    val t = fresh("no-sidecar")
+    scattered(t)
+    ops.setBloomIndex(spark, t, Seq(("k", 0.001)))
+    // partition 0 of the batch is empty: its writer task still emits a
+    // zero-row file, which staging drops before publishing
+    assertIndexed(t, "append with an empty task") {
+      ops.append(spark, t, spark.range(5000, 5400, 1, 4)
+        .filter(spark_partition_id() =!= 0).select(col("id").as("k"))
+        .withColumn("s", lit("fresh")))
+    }
+    ops.deleteMoR(spark, t, col("k") < 10L)
+    val dvDirs = ops.deletionVectors(t).map(f => Paths.get(t, f).getParent).distinct
+    assert(dvDirs.nonEmpty)
+    dvDirs.foreach(d => assert(sidecarsIn(d).isEmpty, s"DV stage $d carries no sidecar"))
+  }
+
+  /** The number of Spark jobs `body` runs, counted by job group. */
+  private def jobsIn(group: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test(s"[$backend] an append to a bloom-declared table runs no extra jobs") {
+    val plain = fresh("jobs-plain")
+    val declared = fresh("jobs-declared")
+    scattered(plain)
+    scattered(declared)
+    ops.setBloomIndex(spark, declared, Seq(("k", 0.001), ("s", 0.001)))
+    def batch = spark.range(5000, 5200).select(col("id").as("k"),
+      concat(lit("key-"), col("id").cast("string")).as("s")).repartition(2)
+    val group = s"bloom-jobs-$backend-${System.nanoTime}"
+    val nPlain = jobsIn(s"$group-plain") { ops.append(spark, plain, batch) }
+    val nDeclared = jobsIn(s"$group-declared") { ops.append(spark, declared, batch) }
+    assert(nPlain > 0)
+    assert(nDeclared === nPlain, "the sidecars cost the append no job of its own")
   }
 
   test(s"[$backend] refusals: unknown column, bad fpp, undeclared probe, unsafe name") {

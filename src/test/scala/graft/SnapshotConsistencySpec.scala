@@ -4,7 +4,8 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.functions._
 
-import graft.sources.{CommitStore, InMemoryCommitStore, LocalLinkCommitStore, VersionedTableOps}
+import graft.sources.{CommitStore, InMemoryCommitStore, LocalLinkCommitStore, MaterializedViewOps,
+  VersionedTableOps}
 
 /** A [[CommitStore]] that delegates everything to `inner` and, once
   * armed, runs a hook right after the next manifest read under a
@@ -99,6 +100,17 @@ abstract class SnapshotConsistencyBattery(backend: String, inner: CommitStore)
     assert(v === base, "a no-op reports the base it saw, not the racing head")
     assert(ops.read(spark, t).filter(col("k") >= 1000L).count() === 5,
       "rows the plan never saw are not deleted")
+  }
+
+  test(s"[$backend] a caught-up refresh returns the view version whose cursor it checked") {
+    val src = seeded("mv-src")
+    val view = freshTable("mv-view")
+    val mv = new MaterializedViewOps(ops)
+    val checked = mv.refresh(spark, view, src, Seq("s"), Seq("k"))
+    store.afterNextManifestRead { ops.compact(spark, view) }
+    val v = mv.refresh(spark, view, src, Seq("s"), Seq("k"))
+    assert(ops.versions(view).last === checked + 1, "the racing view commit landed")
+    assert(v === checked, "the refresh reports the view head it read its cursor from")
   }
 }
 
