@@ -1096,7 +1096,7 @@ object SparkEntry {
         |WHERE c_custkey > third AND c_custkey <= 2 * third""".stripMargin,
     // q_bloom_skip went through the per-file bloom sidecars on a
     // hash-scattered layout (the query asserts files were skipped and
-    // routes the result through readIndexed + a plain IN filter, so
+    // routes the result through read + a plain IN filter, so
     // the pruning ran inside Catalyst planning); the oracle is the
     // plain point lookup the skipping must be invisible to
     "q_bloom_skip" ->
@@ -1373,7 +1373,7 @@ object SparkEntry {
       """SELECT o_orderkey, o_orderpriority FROM orders
         |WHERE o_orderpriority BETWEEN '3' AND '3~'""".stripMargin,
     // q_zone_map_prefix: the startsWith probe through the automatic
-    // readIndexed path (prefix -> [p, p ++ DEL) interval inside the
+    // read path (prefix -> [p, p ++ DEL) interval inside the
     // FileIndex); oracle is the plain LIKE prefix filter
     "q_zone_map_prefix" ->
       """SELECT o_orderkey, o_orderpriority FROM orders

@@ -218,7 +218,7 @@ object VersionedQueries {
     * ([[VersionedTable.setBloomIndex]]): the probe opens only the
     * files whose filters might hold a probed key (asserted: fewer
     * files than the snapshot), and the RETURNED frame goes through
-    * [[VersionedTable.readIndexed]] + a plain IN filter, so the
+    * [[VersionedTable.read]] + a plain IN filter, so the
     * pruning the oracle must not observe happened INSIDE Catalyst
     * planning. False positives re-filter on the survivors — skipping
     * is purely an IO optimization, which is exactly what the DuckDB
@@ -243,7 +243,7 @@ object VersionedQueries {
     val (kept, total) = VersionedTable.filesForPoints(table, "c_custkey", keys, v)
     require(kept.size < total,
       s"blooms must skip files on the scattered layout (kept ${kept.size}/$total)")
-    VersionedTable.readIndexed(spark, table, v)
+    VersionedTable.read(spark, table, v)
       .filter(col("c_custkey").isin(keys: _*))
       .select(col("c_custkey"), col("c_acctbal"))
   }
@@ -307,7 +307,7 @@ object VersionedQueries {
     * [[VersionedTable.filesForRange]] on the dotted stats name
     * (files-skipped asserted), and the AUTOMATIC path — a plain
     * `.filter(col("info.price")...)` through
-    * [[VersionedTable.readIndexed]], whose GetStructField chain
+    * [[VersionedTable.read]], whose GetStructField chain
     * translates to the same dotted interval inside Catalyst planning.
     * Repetition-free nested leaves carry one slot per row, so their
     * footer stats prune with top-level semantics; array/map elements
@@ -330,7 +330,7 @@ object VersionedQueries {
       table, "info.price", 60000d, 140000d, v)
     require(kept.size < total,
       s"nested zone maps must skip the outer price bands (kept ${kept.size}/$total)")
-    outBoundary(VersionedTable.readIndexed(spark, table, v)
+    outBoundary(VersionedTable.read(spark, table, v)
       .filter(col("info.price") >= 60000 && col("info.price") <= 140000)
       .select(col("o_orderkey"), col("info.price").as("price"),
         col("info.prio").as("prio")))
@@ -401,7 +401,7 @@ object VersionedQueries {
 
   /** q_zone_map_auto: AUTOMATIC file skipping — the same key-clustered
     * layout as [[qZoneMapRead]], but read through
-    * [[VersionedTable.readIndexed]] with a PLAIN `.filter()`: the
+    * [[VersionedTable.read]] with a PLAIN `.filter()`: the
     * [[graft.sources.ZoneMapFileIndex]] translates the predicate
     * inside Catalyst planning and prunes the non-intersecting
     * commits' files with no explicit readRange call (the assertion
@@ -424,7 +424,7 @@ object VersionedQueries {
       table, "c_custkey", (third + 1).toDouble, (2 * third).toDouble, v)
     require(kept.size < total,
       s"the index's stats must exclude the outer commits (kept ${kept.size}/$total)")
-    VersionedTable.readIndexed(spark, table, v)
+    VersionedTable.read(spark, table, v)
       .filter(col("c_custkey").between(third + 1, 2 * third))
   }
 
@@ -569,7 +569,7 @@ object VersionedQueries {
       VersionedTable.filesForNullness(table, "c_acctbal", wantNull = true, v)
     require(keptN.size < total, "IS NULL must skip the fully-populated commit")
     outBoundary(
-      VersionedTable.readIndexed(spark, table, v).filter(col("c_acctbal").isNotNull))
+      VersionedTable.read(spark, table, v).filter(col("c_acctbal").isNotNull))
   }
 
   /** q_table_changes: the CDC READ over the commit log — after the
@@ -591,7 +591,7 @@ object VersionedQueries {
 
   /** q_zone_map_prefix: the string PREFIX probe through the AUTOMATIC
     * read path — the same priority-clustered layout as
-    * [[qZoneMapString]], but read via [[VersionedTable.readIndexed]]
+    * [[qZoneMapString]], but read via [[VersionedTable.read]]
     * with a plain `.startsWith` filter: [[graft.sources.ZoneMapFileIndex]]
     * translates the prefix to the interval [p, p ++ DEL) and prunes
     * the other priority clusters inside Catalyst planning (asserted
@@ -611,7 +611,7 @@ object VersionedQueries {
       table, "o_orderpriority", "3", "3~", v)
     require(kept.nonEmpty && kept.size < total,
       s"the prefix interval must skip the other priority clusters (kept ${kept.size}/$total)")
-    VersionedTable.readIndexed(spark, table, v)
+    VersionedTable.read(spark, table, v)
       .filter(col("o_orderpriority").startsWith("3"))
   }
 
@@ -1407,7 +1407,7 @@ object VersionedQueries {
     * optimize skips NOTHING — asserted), then
     * [[VersionedTable.optimize]] rewrites the snapshot range-sorted
     * on o_totalprice and the SAME probe through the automatic
-    * [[VersionedTable.readIndexed]] path skips the out-of-range files
+    * [[VersionedTable.read]] path skips the out-of-range files
     * (asserted). The oracle is the plain price-band SQL: identical
     * rows before and after — optimize must change the layout and
     * nothing else.
@@ -1426,7 +1426,7 @@ object VersionedQueries {
     val (kept, total) = VersionedTable.filesForRange(table, "price", 60000d, 140000d, v)
     require(kept.size < total,
       s"optimize must make the price probe skip files (kept ${kept.size}/$total)")
-    outBoundary(VersionedTable.readIndexed(spark, table, v)
+    outBoundary(VersionedTable.read(spark, table, v)
       .filter(col("price").between(lit(BigDecimal(60000)), lit(BigDecimal(140000)))))
   }
 
@@ -1456,7 +1456,7 @@ object VersionedQueries {
     val (keptP, totP) = VersionedTable.filesForRange(table, "price", 0d, 80000d, v)
     require(keptP.size < totP,
       s"z-order must skip on the price dimension (kept ${keptP.size}/$totP)")
-    outBoundary(VersionedTable.readIndexed(spark, table, v)
+    outBoundary(VersionedTable.read(spark, table, v)
       .filter(col("o_custkey") <= mx / 4 &&
         col("price") <= lit(BigDecimal(80000))))
   }

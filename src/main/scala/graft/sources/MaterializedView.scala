@@ -777,7 +777,7 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
       // The range is a superset of the key set; the semi join below
       // stays the exact scope. Single-key views only (the common
       // shape); compound keys fall back to the full scan.
-      val srcBase = vt.readIndexed(spark, source, Some(head))
+      val srcBase = vt.read(spark, source, Some(head))
       val srcScoped =
         if (keyCols.size != 1) srcBase
         else {

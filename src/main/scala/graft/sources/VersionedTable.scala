@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.Using
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.functions._
 
 /** Minimal versioned table layer — the commit-log core of a lakehouse
@@ -1137,7 +1138,7 @@ class VersionedTableOps(val store: CommitStore) {
     * while the partition columns STAY in the data files, so the read
     * path, schema evolution and zone maps are untouched (a partition
     * column gets min=max zone maps per file for free, making plain
-    * range filters prune partition-exactly through [[readIndexed]]).
+    * range filters prune partition-exactly through [[read]]).
     * What the routing buys beyond zone maps is the METADATA surface:
     * [[dropPartition]] is a pure file-list subtraction (the most
     * common retention operation on a 100 TB table costs one manifest
@@ -1817,10 +1818,11 @@ class VersionedTableOps(val store: CommitStore) {
     * updates win, inserts land; the merged result is published as one
     * atomic commit. Routed through [[mergeKeyed]], so the join and
     * rewrite SCOPE to the files the layout can prove touched — the
-    * key's value-partitions when it is a partition column, the
-    * stat-intersecting files via the committed zone maps otherwise
-    * (round-11: an upsert against a key-clustered unpartitioned table
-    * rewrites O(touched files), not O(table)) — and fall back to the
+    * key's value-partitions when it is a partition column, otherwise
+    * the files the pruning kernel ([[keptFiles]], the one every read
+    * and COW mutation prunes with) keeps for `key IN (the batch's
+    * keys)`, so an upsert against a key-clustered unpartitioned table
+    * rewrites O(touched files), not O(table) — and fall back to the
     * race-safe whole-snapshot closure path when neither proof holds.
     * Semantics are scope-independent: coalesce per column, updates
     * win, unmatched rows pass through. `updates` must be
@@ -1855,7 +1857,7 @@ class VersionedTableOps(val store: CommitStore) {
     * maintenance commit (Delta `OPTIMIZE ... ZORDER BY`'s shape) that
     * makes the zone maps TIGHT: after it, every range probe on a
     * clustering column (explicit [[readRange]] or a plain filter
-    * through [[readIndexed]]) skips the files whose interval the sort
+    * through [[read]]) skips the files whose interval the sort
     * made disjoint. Row set is identical (spec-pinned; a subsequent
     * [[changesBetween]] across it is an empty delta, like compaction).
     *
@@ -1989,25 +1991,17 @@ class VersionedTableOps(val store: CommitStore) {
 
   private def rawRead(spark: SparkSession, table: String, m: Manifest,
       files: Seq[String]): DataFrame =
-    m.structType match {
-      // manifest-recorded schema: scan through the MANIFEST-BACKED
-      // FileIndex (r13 optimization, guide §6 "manifest metadata avoids
-      // directory listing"): `spark.read.parquet(paths…)` resolves the
-      // path list through InMemoryFileIndex, which LAUNCHES A
-      // DISTRIBUTED LISTING JOB once the list exceeds
-      // spark.sql.sources.parallelPartitionDiscovery.threshold (32) —
-      // profiled at ~150 ms of pure scheduling per read of the 64-file
-      // bucketed view state, twice per q_mat_view_bucketed run. The
-      // manifest already knows every file, so indexedScan stats them
-      // driver-side (O(files) metadata lookups, no job) — and zone-map
-      // + bloom file skipping now compose with ANY filtered read, not
-      // just explicit readIndexed/readRange calls.
-      case Some(schema) => indexedScan(spark, table, m, files, schema)
-      // legacy manifests without a recorded schema: parquet schema
-      // merging needs the real footer-resolution path
-      case None => spark.read.option("mergeSchema", "true")
-        .parquet(files.map(f => Paths.get(table, f).toString): _*)
-    }
+    // the manifest-backed scan: `spark.read.parquet(paths…)` resolves
+    // the path list through InMemoryFileIndex, which launches a
+    // distributed listing job once the list exceeds
+    // spark.sql.sources.parallelPartitionDiscovery.threshold (32); the
+    // manifest already knows every file, so indexedScan stats them
+    // driver-side (no job), and zone-map + bloom file skipping compose
+    // with ANY filtered read. Legacy manifests without a recorded
+    // schema scan under their files' merged parquet footers
+    indexedScan(spark, table, m, files, m.structType.getOrElse(
+      spark.read.option("mergeSchema", "true")
+        .parquet(files.map(f => Paths.get(table, f).toString): _*).schema))
 
   /** The shared manifest-backed scan: a parquet HadoopFsRelation over
     * [[ZoneMapFileIndex]] (no directory listing, files come from the
@@ -2022,8 +2016,7 @@ class VersionedTableOps(val store: CommitStore) {
       logical: org.apache.spark.sql.types.StructType): DataFrame = {
     val phys = org.apache.spark.sql.types.StructType(
       logical.fields.map(f => f.copy(name = physicalName(m.renames, f.name))))
-    val idx = new ZoneMapFileIndex(spark, this, table, files, phys,
-      m.bloomBy.map(_._1).toSet)
+    val idx = new ZoneMapFileIndex(this, table, files, m.bloomBy.map(_._1).toSet)
     val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       idx, new org.apache.spark.sql.types.StructType(), phys, None,
       new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
@@ -2326,43 +2319,91 @@ class VersionedTableOps(val store: CommitStore) {
     keepByZoneMaps(table, files,
       ranges.map { case (c, lo, hi) => (physicalNested(m.renames, c), lo, hi) }, Nil)
 
-  /** The shared pruning kernel: of `files`, those whose committed
-    * stats can still satisfy EVERY numeric range (stats double
-    * domain), EVERY string range (lexicographic) and EVERY nullness
-    * probe. A file without stats for a probed column is never
-    * eliminated by that column. Bounds may be infinite
-    * (un-constrained sides). Each directory's `_stats.json` is decoded
-    * once. Used by the explicit probes
-    * ([[filesForRanges]]/[[filesForRangeString]]) and by
-    * [[ZoneMapFileIndex]], which runs it INSIDE Catalyst planning.
+  /** THE file-pruning kernel: of `files` (one snapshot's), those that
+    * can hold a row satisfying every one of `filters` — Catalyst
+    * predicates over PHYSICAL column names, translated by
+    * [[ZoneMapFilters.constraints]], matched against the committed
+    * zone maps ([[keepByZoneMaps]]) and then, for the columns in
+    * `bloomDecl`, against the bloom sidecars ([[keepByBlooms]]).
+    * Every pruning decision runs through it: scan planning
+    * ([[ZoneMapFileIndex]], so every filtered [[read]] and the
+    * explicit `readRange`/`readPoints` forms), the copy-on-write
+    * split ([[cowSplit]]) and the zone-map-scoped keyed merge
+    * ([[mergeZonedOrWhole]]). It only ever drops files that provably
+    * hold no matching row.
+    */
+  private[sources] def keptFiles(table: String, files: Seq[String],
+      bloomDecl: Set[String], filters: Seq[Expression]): Seq[String] = {
+    val (num, str, nul, pts) = ZoneMapFilters.constraints(filters)
+    keepByBlooms(table, keepByZoneMaps(table, files, num, str, nul, pts),
+      pts.collect { case (c, lits) if bloomDecl(c) =>
+        (c, lits.map(BloomSkipIndex.hashLiteral)) })
+  }
+
+  /** The zone-map step of [[keptFiles]]: of `files`, those whose
+    * committed stats can still satisfy EVERY numeric range (stats
+    * double domain), EVERY string range (UTF-8 byte order), EVERY
+    * nullness probe and EVERY point list (some listed value inside
+    * the file's [min, max]). A file without stats for a probed column
+    * is never eliminated by that column. Bounds may be infinite
+    * (un-constrained sides). Each directory's `_stats.json` is
+    * decoded once. The explicit `filesFor*` probes call it directly.
     */
   private[sources] def keepByZoneMaps(table: String, files: Seq[String],
       numRanges: Seq[(String, Double, Double)],
       strRanges: Seq[(String, String, String)],
-      nullProbes: Seq[(String, Boolean)] = Nil): Seq[String] = {
-    if (numRanges.isEmpty && strRanges.isEmpty && nullProbes.isEmpty) return files
+      nullProbes: Seq[(String, Boolean)] = Nil,
+      points: Seq[(String, Seq[Literal])] = Nil): Seq[String] = {
+    import ZoneMapFilters.{litNum, litStr, utf8Cmp}
+    // a point list prunes in the domain where EVERY listed value
+    // converts; sorted once for a binary search per file
+    val numPts = points.flatMap { case (c, ls) =>
+      val ds = ls.flatMap(litNum)
+      Option.when(ds.size == ls.size)((c, ds.sorted(Ordering.Double.TotalOrdering).toArray)) }
+    val strPts = points.flatMap { case (c, ls) =>
+      val ss = ls.flatMap(litStr)
+      Option.when(ss.size == ls.size)((c, ss.sortWith(utf8Cmp(_, _) < 0).toArray)) }
+    if (numRanges.isEmpty && strRanges.isEmpty && nullProbes.isEmpty &&
+        numPts.isEmpty && strPts.isEmpty) return files
+    // does a sorted list hold a value v with lo <= v <= hi?
+    def holds[T](vs: Array[T], lo: T, hi: T)(cmp: (T, T) => Int): Boolean = {
+      var (l, h) = (0, vs.length)
+      while (l < h) {
+        val mid = (l + h) >>> 1
+        if (cmp(vs(mid), lo) < 0) l = mid + 1 else h = mid
+      }
+      l < vs.length && cmp(vs(l), hi) <= 0
+    }
     val stats = files.map(relDir).distinct.map(d => d -> dirStats(table, d)).toMap
     files.filter { f =>
       stats(relDir(f)).get(relName(f)).forall { st =>
         numRanges.forall { case (c, lo, hi) =>
           st.num.get(c).forall { case (mi, ma) => ma >= lo && mi <= hi }
         } && strRanges.forall { case (c, lo, hi) =>
-          st.str.get(c).forall { case (mi, ma) => ma >= lo && mi <= hi }
+          st.str.get(c).forall { case (mi, ma) => utf8Cmp(ma, lo) >= 0 && utf8Cmp(mi, hi) <= 0 }
         } && nullProbes.forall { case (c, wantNull) =>
           // IS NULL keeps files with ≥1 null; IS NOT NULL keeps files
           // with ≥1 non-null row; unknown always keeps
           (for (rows <- st.rows; nulls <- st.nulls.get(c))
             yield if (wantNull) nulls > 0 else nulls < rows).getOrElse(true)
+        } && numPts.forall { case (c, vs) =>
+          // widened one ULP like a range bound: literal and stats
+          // conversions may round a decimal differently
+          st.num.get(c).forall { case (mi, ma) =>
+            holds(vs, math.nextDown(mi), math.nextUp(ma))(java.lang.Double.compare) }
+        } && strPts.forall { case (c, vs) =>
+          st.str.get(c).forall { case (mi, ma) => holds(vs, mi, ma)(utf8Cmp) }
         }
       }
     }
   }
 
   /** Range read with manifest-level file skipping — the zone-map scan
-    * a lakehouse OPTIMIZE layout serves: only files whose committed
-    * [min, max] for `statsCol` intersects [lo, hi] are opened (plus
-    * the exact predicate on the survivors, so skipping is purely an
-    * IO optimization, never a semantics change). On a sorted or
+    * a lakehouse OPTIMIZE layout serves: [[read]] plus the exact
+    * native-typed residual of each range, so the pruning kernel
+    * ([[keptFiles]]) opens only the files whose committed [min, max]
+    * for `statsCol` can hold a row in [lo, hi] and skipping is purely
+    * an IO optimization, never a semantics change. On a sorted or
     * clustered table this turns a selective range probe from
     * O(snapshot files) into O(matching files) — the driver-side cost
     * is one manifest + one `_stats.json` per data dir, no Spark job.
@@ -2371,9 +2412,8 @@ class VersionedTableOps(val store: CommitStore) {
       lo: Double, hi: Double, version: Option[Long] = None): DataFrame =
     readRanges(spark, table, Seq((statsCol, lo, hi)), version)
 
-  /** Multi-column [[readRange]]: zone-map skipping on the CONJUNCTION
-    * of the given ranges, exact native-typed residuals re-applied per
-    * column on the survivors.
+  /** Multi-column [[readRange]]: the CONJUNCTION of the given ranges'
+    * exact native-typed residuals over [[read]].
     */
   def readRanges(spark: SparkSession, table: String,
       ranges: Seq[(String, Double, Double)],
@@ -2382,20 +2422,14 @@ class VersionedTableOps(val store: CommitStore) {
     ranges.foreach { case (c, lo, hi) =>
       require(java.lang.Double.isFinite(lo) && java.lang.Double.isFinite(hi),
         s"readRange bounds for $c must be finite") }
-    val m = snapshot(table, version)
-    // the kept files, their deletion vectors and the empty-survivor
-    // fallback all come from the ONE snapshot the pruning used
-    val df = readKept(spark, table, m, keptByRanges(table, m, m.files, ranges))
+    val df = read(spark, table, version)
     df.filter(ranges.map { case (c, lo, hi) => residualCond(df, c, lo, hi) }.reduce(_ && _))
   }
 
   /** String-domain zone-map probe: files whose committed [min, max]
     * for the STRING column `statsCol` can still hold a value in
-    * [lo, hi] (lexicographic). Bounds must be printable ASCII — the
-    * range where the driver-side compare, parquet's unsigned-byte
-    * stats order and Spark's UTF8 comparison all agree (the stats
-    * writer enforces the same restriction, so an indexed interval is
-    * always order-consistent with the probe).
+    * [lo, hi] (UTF-8 byte order). Bounds must be printable ASCII,
+    * the domain the stats writer indexes.
     */
   def filesForRangeString(table: String, statsCol: String, lo: String, hi: String,
       version: Option[Long] = None): (Seq[String], Int) = {
@@ -2405,20 +2439,24 @@ class VersionedTableOps(val store: CommitStore) {
 
   private def keptByStringRange(table: String, m: Manifest, statsCol: String,
       lo: String, hi: String): Seq[String] = {
-    def ascii(s: String) = s.forall(c => c >= ' ' && c <= '~')
-    require(ascii(lo) && ascii(hi), "string probe bounds must be printable ASCII")
+    requireAscii(lo, hi)
     keepByZoneMaps(table, m.files, Nil, Seq((physicalName(m.renames, statsCol), lo, hi)))
   }
 
-  /** [[readRange]] for a STRING column: manifest-level skipping on the
-    * lexicographic string zone maps, exact `BETWEEN` residual on the
-    * survivors (string literals — parquet row-group pushdown applies).
+  private def requireAscii(lo: String, hi: String): Unit =
+    require(Seq(lo, hi).forall(_.forall(c => c >= ' ' && c <= '~')),
+      "string probe bounds must be printable ASCII")
+
+  /** [[readRange]] for a STRING column: [[read]] plus the exact
+    * `BETWEEN` residual (string literals — the pruning kernel skips
+    * on the string zone maps, parquet row-group pushdown applies on
+    * the survivors). Bounds must be printable ASCII, as for
+    * [[filesForRangeString]].
     */
   def readRangeString(spark: SparkSession, table: String, statsCol: String,
       lo: String, hi: String, version: Option[Long] = None): DataFrame = {
-    val m = snapshot(table, version)
-    readKept(spark, table, m, keptByStringRange(table, m, statsCol, lo, hi))
-      .filter(col(statsCol).between(lit(lo), lit(hi)))
+    requireAscii(lo, hi)
+    read(spark, table, version).filter(col(statsCol).between(lit(lo), lit(hi)))
   }
 
   /** Declare a per-file BLOOM INDEX on `cols` (logical name → target
@@ -2479,31 +2517,38 @@ class VersionedTableOps(val store: CommitStore) {
 
   private def keptByPoints(table: String, m: Manifest, column: String,
       values: Seq[Any]): Seq[String] = {
+    val (ph, dt) = bloomColumn(table, m, column, values)
+    keepByBlooms(table, m.files, Seq((ph, values.map(x =>
+      BloomSkipIndex.hashLiteral(Literal.create(x, dt))))))
+  }
+
+  /** The physical name and type of the bloom-indexed `column` of `m`,
+    * after the point probes' argument checks.
+    */
+  private def bloomColumn(table: String, m: Manifest, column: String,
+      values: Seq[Any]): (String, org.apache.spark.sql.types.DataType) = {
     require(values.nonEmpty, "at least one probe value")
     val ph = physicalName(m.renames, column)
     require(m.bloomBy.exists(_._1 == ph),
       s"$column is not bloom-indexed on $table at version ${m.version} " +
         s"(declared: ${m.logicalBloomBy.map(_._1).mkString(", ") })")
-    val dt = m.structType.flatMap(_.fields.find(_.name == column))
+    (ph, m.structType.flatMap(_.fields.find(_.name == column))
       .map(_.dataType).getOrElse(throw new IllegalArgumentException(
-        s"$column is not in $table's schema at version ${m.version}"))
-    val hashes = values.map(x => BloomSkipIndex.hashLiteral(
-      org.apache.spark.sql.catalyst.expressions.Literal.create(x, dt)))
-    keepByBlooms(table, m.files, Seq((ph, hashes)))
+        s"$column is not in $table's schema at version ${m.version}")))
   }
 
-  /** Point-lookup read with bloom file skipping: only files whose
-    * sidecar might contain one of `values` are opened, with the exact
-    * IN residual on the survivors (false positives re-filter — the
-    * skipping is purely an IO optimization). The automatic path is
-    * [[readIndexed]] + a plain `.filter(col === x)` — this explicit
-    * form exists for the same reason [[readRange]] does.
+  /** Point-lookup read with bloom file skipping: [[read]] plus the
+    * exact IN residual, so the pruning kernel opens only the files
+    * whose zone maps and sidecars might hold one of `values` (false
+    * positives re-filter — the skipping is purely an IO
+    * optimization). The same checks as [[filesForPoints]] apply: the
+    * column must be bloom-indexed at the version read.
     */
   def readPoints(spark: SparkSession, table: String, column: String,
       values: Seq[Any], version: Option[Long] = None): DataFrame = {
     val m = snapshot(table, version)
-    readKept(spark, table, m, keptByPoints(table, m, column, values))
-      .filter(col(column).isin(values: _*))
+    bloomColumn(table, m, column, values)
+    readSnapshot(spark, table, m).filter(col(column).isin(values: _*))
   }
 
   /** The bloom pruning kernel ([[keepByZoneMaps]]' equality sibling):
@@ -2524,34 +2569,6 @@ class VersionedTableOps(val store: CommitStore) {
         }
       }
     }
-
-  /** Snapshot read whose FILE LISTING is zone-map-aware INSIDE
-    * Catalyst (via [[ZoneMapFileIndex]]) — the integration that makes
-    * skipping automatic: a plain `.filter()` over the returned frame
-    * prunes non-intersecting files at planning time, with NO explicit
-    * readRange call, and the untouched predicate still gets parquet
-    * row-group pushdown + codegen on the survivors. The schema is the
-    * manifest's recorded schema; the relation is a plain parquet
-    * HadoopFsRelation over the custom index, so every downstream
-    * Spark optimization applies unchanged.
-    */
-  def readIndexed(spark: SparkSession, table: String,
-      version: Option[Long] = None): DataFrame = {
-    val m = snapshot(table, version)
-    val logical = m.structType.getOrElse(readSnapshot(spark, table, m).schema)
-    // the SCAN runs over the files' PHYSICAL names; the logical view
-    // is a projection on top. Filters a user puts on logical columns
-    // rewrite through the aliases to the scan's physical attributes,
-    // so ZoneMapFileIndex receives filter names that already match
-    // the (physical) stats keys — no translation needed there
-    val base = indexedScan(spark, table, m, m.files, logical)
-    // merge-on-read: subtract the version's deletion vectors, same
-    // broadcast anti join as readFiles — filters on user columns
-    // still reach the FileIndex (they sit below the join's stream
-    // side), so zone-map skipping and the DV subtraction compose
-    if (m.dvs.isEmpty) base
-    else dvAnti(spark, table, dvKeyed(base), m.dvs).drop(DvFileCol, DvPosCol)
-  }
 
   /** The exact residual predicate on the NATIVE column type: wrapping
     * the column in cast("double") would defeat parquet row-group
@@ -2593,14 +2610,14 @@ class VersionedTableOps(val store: CommitStore) {
           sides.reduceOption(_ && _).getOrElse(lit(true))
         }
       case FloatType =>
-        // native float literals keep parquet row-group pushdown (a
-        // double cast on the column would defeat it); widened OUTWARD
-        // one ULP so no float inside [lo, hi] is excluded, with the
-        // exact double bounds re-applied as a residual conjunct
-        val lof = { val f = lo.toFloat; if (f.toDouble > lo) Math.nextDown(f) else f }
-        val hif = { val f = hi.toFloat; if (f.toDouble < hi) Math.nextUp(f) else f }
-        col(statsCol).between(lit(lof), lit(hif)) &&
-          col(statsCol).cast(DoubleType).between(lo, hi)
+        // bounds rounded INWARD to the nearest floats are exact (float
+        // → double is exact, so a float lies in [lo, hi] iff it lies in
+        // [lof, hif]); native float literals keep parquet row-group
+        // pushdown and file pruning, which a double cast on the column
+        // would defeat
+        val lof = { val f = lo.toFloat; if (f.toDouble < lo) Math.nextUp(f) else f }
+        val hif = { val f = hi.toFloat; if (f.toDouble > hi) Math.nextDown(f) else f }
+        col(statsCol).between(lit(lof), lit(hif))
       case _ => col(statsCol).between(lo, hi)
     }
   }
@@ -2785,163 +2802,69 @@ class VersionedTableOps(val store: CommitStore) {
     }.isEmpty
   }
 
-  /** How a keyed merge decides which files it may touch when no
-    * partition column scopes it: a driver-side probe of the committed
-    * per-file zone maps of ONE merge key. Point probes (the source
-    * batch's distinct key values, sorted) keep a file iff some value
-    * lands in its [min, max]; range probes (the batch's key min/max,
-    * used when the distinct set exceeds the collect bound) keep a
-    * file iff the intervals intersect. Files without committed stats
-    * for the key are always kept — correctness never depends on the
-    * probe, only the rewrite scope does.
+  /** The zoned merge's file probe, over the FIRST merge key whose
+    * type the zone maps index faithfully (integrals, decimals, dates,
+    * timestamps, strings; floats/doubles are excluded — NaN joins
+    * equal under Spark semantics but is unordered in stats — as are
+    * booleans and complex types): given the key's physical name, the
+    * predicate `key IN (the batch's distinct non-null values)`, or
+    * past `maxTouched` values `key >= min AND key <= max`, for the
+    * pruning kernel [[keptFiles]]. Values are taken in the target's
+    * column type, so the kernel's bloom hashes match the stored
+    * ones (a value the type cannot hold matches no stored row and is
+    * dropped). Null keys never EqualTo-match a stored row: they probe
+    * nothing (the scoped mergeFn still sees them and lands them as
+    * inserts). One bounded distinct collect; past the bound, one
+    * min/max aggregate. None when no key qualifies.
     */
-  private sealed trait KeyProbe
-  private case class NumPoints(sorted: Array[Double]) extends KeyProbe
-  private case class StrPoints(sorted: Array[String]) extends KeyProbe
-  private case class NumRange(lo: Double, hi: Double) extends KeyProbe
-  private case class StrRange(lo: String, hi: String) extends KeyProbe
-
-  /** Unsigned UTF-8 byte order — the ONE ordering parquet binary
-    * stats, Spark's UTF8String comparisons and the committed string
-    * zone maps all agree on. Java String.compareTo (UTF-16 code
-    * units) diverges from it for supplementary characters, so the
-    * driver-side string probes compare through this, never compareTo
-    * — a probe value from any script stays order-consistent with the
-    * (ASCII-restricted) committed bounds.
-    */
-  private def utf8Cmp(a: String, b: String): Int = {
-    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    val n = math.min(x.length, y.length)
-    while (i < n) {
-      val c = (x(i) & 0xff) - (y(i) & 0xff)
-      if (c != 0) return c
-      i += 1
-    }
-    x.length - y.length
-  }
-
-  /** Pick the merge key the zone maps can scope on and aggregate the
-    * source batch's probe for it: the FIRST key whose type has a
-    * faithful stats-domain rendering (integrals/decimals as the
-    * double value — round-to-nearest is MONOTONE, and both the probe
-    * and the stats writer round the same way, so a true value inside
-    * a file's [min, max] stays inside the rounded interval and the
-    * test remains conservative; dates as epoch-days; timestamps as
-    * epoch-µs; strings verbatim
-    * under UTF-8 byte order). Floats/doubles are excluded (NaN joins
-    * equal under Spark semantics but is unordered in stats), as are
-    * booleans and complex types (no committed stats). One distinct
-    * collect bounded by `maxTouched`; past the bound, one min/max
-    * aggregate — the batch-side cost never exceeds one pass over the
-    * source either way. None when no key qualifies.
-    */
-  /** Returns the key column, its zone-map probe, and — when the batch
-    * is point-sized — the XxHash64 hashes of the NATIVE key values
-    * for the bloom-sidecar refinement (empty past the point bound:
-    * a min/max envelope has no value list to test). The natives ride
-    * the SAME bounded distinct collect as the domain values — no
-    * second pass over the source.
-    */
-  private def keyProbeFor(updates: DataFrame, keys: Seq[String],
-      maxTouched: Int): Option[(String, KeyProbe, Seq[Long])] = {
+  private def keyProbe(updates: DataFrame, head: Manifest, keys: Seq[String],
+      maxTouched: Int): Option[(org.apache.spark.sql.types.StructField, String => Expression)] = {
+    import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.types._
-    val usable = keys.flatMap(k => updates.schema.fields.find(_.name == k))
-      .flatMap { f =>
-        f.dataType match {
-          case ByteType | ShortType | IntegerType | LongType | _: DecimalType =>
-            Some((f.name, col(f.name).cast("double"), true))
-          case DateType =>
-            Some((f.name, unix_date(col(f.name)).cast("double"), true))
-          case TimestampType =>
-            Some((f.name, unix_micros(col(f.name)).cast("double"), true))
-          case StringType => Some((f.name, col(f.name), false))
-          case _ => None
-        }
-      }.headOption
-    usable.map { case (name, domain, isNum) =>
-      // null keys never EqualTo-match a stored row: they probe nothing
-      // (the scoped mergeFn still sees them and lands them as inserts)
-      val raw = updates
-        .select(col(name).as("__graft_nk"), domain.as("__graft_mk"))
-        .where(col("__graft_mk").isNotNull)
-        .distinct().limit(maxTouched + 1).collect()
-      if (raw.length <= maxTouched) {
-        val probe: KeyProbe =
-          if (isNum) NumPoints(raw.map(_.getDouble(1)).sorted)
-          else StrPoints(raw.map(_.getString(1)).sortWith(utf8Cmp(_, _) < 0))
-        val dt = updates.schema(name).dataType
-        val hashes = raw.map(r => BloomSkipIndex.hashLiteral(
-          org.apache.spark.sql.catalyst.expressions.Literal.create(r.get(0), dt)))
-        (name, probe, hashes.toSeq)
-      } else {
-        val mm = updates.agg(min(domain), max(domain)).head()
-        val probe: KeyProbe =
-          if (isNum) NumRange(mm.getDouble(0), mm.getDouble(1))
-          else StrRange(mm.getString(0), mm.getString(1))
-        (name, probe, Nil)
+    val target = head.structType.getOrElse(new StructType())
+    keys.filter(updates.columns.contains).flatMap(k => target.find(_.name == k))
+      .find(_.dataType match {
+        case ByteType | ShortType | IntegerType | LongType | _: DecimalType |
+             DateType | TimestampType | StringType => true
+        case _ => false
+      }).map { f =>
+        val key = col(f.name).try_cast(f.dataType)
+        val vals = updates.select(key).where(key.isNotNull)
+          .distinct().limit(maxTouched + 1).collect()
+          .map(r => Literal.create(r.get(0), f.dataType)).toSeq
+        def attr(phys: String) = AttributeReference(phys, f.dataType)()
+        f -> (if (vals.size <= maxTouched) (phys: String) => In(attr(phys), vals)
+        else {
+          val mm = updates.agg(min(key), max(key)).head()
+          val (lo, hi) = (Literal.create(mm.get(0), f.dataType), Literal.create(mm.get(1), f.dataType))
+          (phys: String) => And(GreaterThanOrEqual(attr(phys), lo), LessThanOrEqual(attr(phys), hi))
+        })
       }
-    }
-  }
-
-  /** The file subset a key probe cannot prove untouched — the zoned
-    * merge's split kernel ([[keepByZoneMaps]]' point-set sibling;
-    * same stats source, same keep-on-unknown conservatism). Point
-    * probes binary-search the sorted values per file: O(files ·
-    * log values) driver work, no Spark job.
-    */
-  private def filesTouchedByKey(table: String, files: Seq[String],
-      physCol: String, probe: KeyProbe): Seq[String] = {
-    val stats = files.map(relDir).distinct.map(d => d -> dirStats(table, d)).toMap
-    def num(f: String) = stats(relDir(f)).get(relName(f)).flatMap(_.num.get(physCol))
-    def str(f: String) = stats(relDir(f)).get(relName(f)).flatMap(_.str.get(physCol))
-    probe match {
-      case NumPoints(vals) =>
-        files.filter(f => num(f).forall { case (mi, ma) =>
-          val i0 = java.util.Arrays.binarySearch(vals, mi)
-          val i = if (i0 >= 0) i0 else -i0 - 1
-          i < vals.length && vals(i) <= ma
-        })
-      case NumRange(lo, hi) =>
-        files.filter(f => num(f).forall { case (mi, ma) => ma >= lo && mi <= hi })
-      case StrPoints(vals) =>
-        files.filter(f => str(f).forall { case (mi, ma) =>
-          var lo = 0
-          var hi = vals.length
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (utf8Cmp(vals(mid), mi) < 0) lo = mid + 1 else hi = mid
-          }
-          lo < vals.length && utf8Cmp(vals(lo), ma) <= 0
-        })
-      case StrRange(lo, hi) =>
-        files.filter(f => str(f).forall { case (mi, ma) =>
-          utf8Cmp(ma, lo) >= 0 && utf8Cmp(mi, hi) <= 0 })
-    }
   }
 
   /** The ZONE-MAP-scoped keyed merge — [[mergeKeyed]]'s path for the
     * layouts the partition path cannot prove, UNPARTITIONED tables
-    * above all (the round-10 verdict's top item: upsert is the
-    * canonical lakehouse write, and without this every SQL MERGE /
-    * Scala upsert whose ON key is not a partition column rewrote the
-    * whole snapshot). The source batch's ON-key values are aggregated
-    * into a probe ([[keyProbeFor]]), the target's files split through
-    * the committed zone maps ([[filesTouchedByKey]] — the same stats
-    * the COW DELETE/UPDATE split prunes with), and `mergeFn` runs
-    * over ONLY the stat-intersecting files' rows; every other file
-    * carries into the new manifest BY REFERENCE. On a key-clustered
-    * layout (OPTIMIZE on the key, or naturally-ordered ingest) a
-    * narrow merge therefore rewrites O(touched files), not O(table) —
-    * at 100 TB the difference between a usable and an unusable upsert.
+    * above all (without it every SQL MERGE / Scala upsert whose ON
+    * key is not a partition column rewrites the whole snapshot). The
+    * source batch's ON-key values become one predicate ([[keyProbe]]:
+    * `key IN (…)`, or the batch's key range past `maxTouched`
+    * values), the target's files split through the
+    * pruning kernel ([[keptFiles]] — the same zone maps and bloom
+    * sidecars the COW DELETE/UPDATE split and every read prune with),
+    * and `mergeFn` runs over ONLY the kept files' rows; every other
+    * file carries into the new manifest BY REFERENCE. On a
+    * key-clustered layout (OPTIMIZE on the key, or naturally-ordered
+    * ingest) a narrow merge therefore rewrites O(touched files), not
+    * O(table); on a bloom-indexed key an unclustered layout is scoped
+    * by the sidecars.
     *
-    * WHY carrying is sound: the probe keeps every file whose stats
-    * admit ANY source key, so a carried file provably holds no row
-    * whose key EqualTo-matches any source row — under [[mergeKeyed]]'s
-    * contract (mergeFn is a keyed merge: unmatched target rows pass
-    * through unchanged, matches and inserts depend only on same-key
-    * rows) those rows are exactly the merge's fixed points. Source
+    * WHY carrying is sound: the kernel keeps every file whose stats
+    * and sidecars admit ANY source key, so a carried file provably
+    * holds no row whose key EqualTo-matches any source row — under
+    * [[mergeKeyed]]'s contract (mergeFn is a keyed merge: unmatched
+    * target rows pass through unchanged, matches and inserts depend
+    * only on same-key rows) those rows are exactly the merge's fixed
+    * points. Source
     * rows matching nothing (genuinely new keys, null keys) land as
     * inserts in the scoped output. Touched rows are read WITH the
     * deletion vectors subtracted, so MoR-deleted rows cannot
@@ -2960,38 +2883,29 @@ class VersionedTableOps(val store: CommitStore) {
       mergeFn: (DataFrame, DataFrame) => DataFrame,
       maxTouched: Int, maxAttempts: Int): Long = {
     def whole() = mergeAs(spark, table, op, updates, mergeFn)
-    // Small-snapshot gate (round-11 verdict #4): the probe is a Spark
-    // aggregate over the source batch plus driver-side stats reads —
+    // Small-snapshot gate: the probe is a Spark aggregate over the
+    // source batch plus driver-side stats reads —
     // a fixed cost that buys nothing when the snapshot is a handful
     // of files (the whole rewrite touches those same files anyway).
     // Skip straight to the whole-snapshot path below the floor; the
     // O(touched-files) decade behavior only matters once the file
     // count is large enough for carrying to win.
     if (head0.files.size < ZoneMergeFileFloor) return whole()
-    val (keyCol, probe, keyHashes) = keyProbeFor(updates, keys, maxTouched) match {
+    val (key, probe) = keyProbe(updates, head0, keys, maxTouched) match {
       case Some(kp) => kp
       case None => return whole()
     }
     var attempts = 0
     while (attempts < maxAttempts) {
       val head = if (attempts == 0) head0 else headManifest(table)
-      val all = head.files
-      val phys = physicalNested(head.renames, keyCol)
-      val zoneTouched = filesTouchedByKey(table, all, phys, probe)
-      // bloom refinement (round 13): on an UNCLUSTERED layout the
-      // interval probe keeps ~every file (each spans the key domain)
-      // and the scoped path degrades to whole-snapshot — the sidecars
-      // re-scope it to the files that might actually hold a source
-      // key. Point-sized batches only (a range probe has no value
-      // list); same conservatism (no sidecar → kept), so carrying
-      // stays sound: a dropped file provably holds no matching key
-      val touched =
-        if (keyHashes.isEmpty || !head.bloomBy.exists(_._1 == phys))
-          zoneTouched
-        else keepByBlooms(table, zoneTouched, Seq((phys, keyHashes)))
-      if (touched.size >= all.size) return whole()
-      val merged = mergeFn(readKept(spark, table, head, touched), updates)
       val headSchema = schemaOf(spark, table, head)
+      // the probe's literals carry head0's key type
+      if (!headSchema.find(_.name == key.name).exists(_.dataType == key.dataType))
+        return whole()
+      val touched = keptFiles(table, head.files, head.bloomBy.map(_._1).toSet,
+        Seq(probe(physicalName(head.renames, key.name))))
+      if (touched.size >= head.files.size) return whole()
+      val merged = mergeFn(readKept(spark, table, head, touched), updates)
       if (asStored(merged.schema).fields.map(f => (f.name, f.dataType)).toSet !=
           headSchema.fields.map(f => (f.name, f.dataType)).toSet) return whole()
       try return replaceFilesScoped(spark, table, head, op, merged, touched.toSet)
@@ -3025,50 +2939,31 @@ class VersionedTableOps(val store: CommitStore) {
   }
 
   /** The copy-on-write file split every row-level mutation shares:
-    * `cond` resolved and constant-folded against the base snapshot,
-    * translated through [[ZoneMapFilters]] (the SAME conservative
-    * rules the automatic read path prunes with), and matched against
-    * the committed zone maps — files whose stats PROVE no row can
-    * match are carried into the next manifest BY REFERENCE (zero
-    * bytes moved); only the possibly-matching files are rewritten.
-    * On a clustered layout a keyed DELETE/UPDATE therefore rewrites
-    * O(touched files), not O(table) — the Delta/Iceberg COW shape,
-    * and the difference between a usable and an unusable mutation at
-    * 100 TB. Untranslatable predicates (OR, functions, UDFs)
-    * conservatively touch everything — correctness never depends on
-    * the pruning.
+    * `cond` planned over the base snapshot's manifest-backed scan and
+    * its pushed data filters (type-coercion casts around literals
+    * folded, names PHYSICAL — exactly what [[ZoneMapFileIndex]]
+    * receives for the same filtered read) run through the pruning
+    * kernel [[keptFiles]]. Files the kernel drops PROVABLY hold no
+    * matching row and carry into the next manifest BY REFERENCE (zero
+    * bytes moved); only the kept files are rewritten. On a clustered
+    * layout a keyed DELETE/UPDATE therefore rewrites O(touched
+    * files), not O(table) — the Delta/Iceberg COW shape — and on a
+    * bloom-indexed column `DELETE WHERE key = x` rewrites only the
+    * files that might hold the key. Untranslatable predicates (OR,
+    * functions, UDFs) conservatively touch everything — correctness
+    * never depends on the pruning.
     */
   private def cowSplit(spark: SparkSession, table: String, base: Manifest,
       cond: Column): (Seq[String], Seq[String]) = {
-    val all = base.files
-    val snap = readFiles(spark, table, base, all)
-    // optimizedPlan so type-coercion casts around literals are folded
-    // to the bare column-vs-literal shapes the translator matches
-    val condExpr = snap.filter(cond).queryExecution.optimizedPlan.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }
-    val (num0, str0, nul0, pts0) = ZoneMapFilters.constraints(condExpr.toSeq)
-    // the predicate names LOGICAL columns; stats are keyed physical
-    val ren = base.renames
-    val num = num0.map { case (c, lo, hi) => (physicalNested(ren, c), lo, hi) }
-    val str = str0.map { case (c, lo, hi) => (physicalNested(ren, c), lo, hi) }
-    val nul = nul0.map { case (c, w) => (physicalNested(ren, c), w) }
-    val zoned =
-      if (num.isEmpty && str.isEmpty && nul.isEmpty) all
-      else keepByZoneMaps(table, all, num, str, nul)
-    // bloom sidecars prune the REWRITE set the same way they prune
-    // reads: `DELETE WHERE key = x` on a bloom-indexed unclustered
-    // column rewrites only the files that might hold the key — the
-    // zone maps alone would rewrite the whole table (every file's
-    // interval spans the domain)
-    val bloomDecl = base.bloomBy.map(_._1).toSet
-    val probes = pts0.collect {
-      case (c, lits) if bloomDecl.contains(physicalNested(ren, c)) =>
-        (physicalNested(ren, c), lits.map(BloomSkipIndex.hashLiteral)) }
-    val touched =
-      if (probes.isEmpty) zoned else keepByBlooms(table, zoned, probes)
-    val touchedSet = touched.toSet
-    (touched, all.filterNot(touchedSet))
+    import org.apache.spark.sql.catalyst.planning.ScanOperation
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val filters = readSnapshot(spark, table, base).filter(cond)
+      .queryExecution.optimizedPlan.collectFirst {
+        case ScanOperation(_, _, fs, LogicalRelation(r: HadoopFsRelation, _, _, _, _))
+            if r.location.isInstanceOf[ZoneMapFileIndex] => fs.filter(_.deterministic)
+      }.getOrElse(Nil)
+    val touched = keptFiles(table, base.files, base.bloomBy.map(_._1).toSet, filters).toSet
+    base.files.partition(touched)
   }
 
   /** Predicate DELETE as a commit: rows where `cond` is TRUE are

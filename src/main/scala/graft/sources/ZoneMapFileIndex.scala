@@ -3,7 +3,6 @@ package graft.sources
 import scala.collection.mutable
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
@@ -11,38 +10,42 @@ import org.apache.spark.sql.types._
 
 /** Zone-map-aware [[FileIndex]] over one committed version of a
   * [[VersionedTable]] — the Delta-`TahoeFileIndex` integration shape:
-  * instead of the user calling `readRange` explicitly, the manifest
-  * zone maps apply INSIDE Catalyst's planning. `FileSourceScanExec`
-  * hands this index the query's data filters when it lists files, so
-  * a plain
-  * {{{ VersionedTable.readIndexed(spark, t).filter($"k" between(lo, hi)) }}}
-  * opens only the files whose committed per-file intervals intersect
-  * the predicate — and composes with everything else Spark does with
+  * the manifest zone maps and bloom sidecars apply INSIDE Catalyst's
+  * planning. `FileSourceScanExec` hands this index the query's data
+  * filters when it lists files, so a plain
+  * {{{ VersionedTable.read(spark, t).filter($"k" between(lo, hi)) }}}
+  * opens only the files whose committed per-file statistics can hold
+  * a matching row — and composes with everything else Spark does with
   * the remaining filters (parquet row-group pushdown on the
   * survivors, whole-stage codegen residuals), because the original
   * predicate is untouched: this index only SHRINKS the file list,
   * never changes semantics.
   *
-  * Filter translation (shared with the copy-on-write DELETE/UPDATE
-  * path — see [[ZoneMapFilters]]) is deliberately conservative:
-  *  - only `>`, `>=`, `<`, `<=`, `=` between a bare column and a
-  *    literal (either order), all-literal null-free IN / InSet lists
-  *    (widened to their [min, max] envelope — gaps re-filter on the
-  *    survivors), and string `startsWith` (a prefix interval),
-  *    conjoined by AND, are used; anything else (casts, functions,
-  *    OR, UDFs) simply prunes nothing;
+  * Which files are kept is decided by the one pruning kernel,
+  * [[VersionedTableOps.keptFiles]], that the copy-on-write
+  * DELETE/UPDATE split and the keyed merge also run. Its filter
+  * translation ([[ZoneMapFilters]]) is deliberately conservative:
+  *  - only `>`, `>=`, `<`, `<=`, `=`, `<=>` between a bare column
+  *    and a literal (either order), all-literal null-free IN / InSet
+  *    lists and string `startsWith` (a prefix interval), conjoined by
+  *    AND, are used; anything else (casts, functions, OR, UDFs)
+  *    simply prunes nothing;
+  *  - an equality or IN list is a POINT list: a file is kept only if
+  *    some listed value lies in its [min, max] (so a file inside the
+  *    list's envelope that holds none of the values is skipped), and,
+  *    on a bloom-declared column, only if its sidecar might hold one;
   *  - numeric/date/timestamp/decimal literals convert to the stats'
   *    double domain widened one ULP OUTWARD, and strict bounds are
   *    relaxed to inclusive — a boundary file is always kept (the
   *    residual predicate Spark still evaluates makes the row set
   *    exact);
-  *  - string literals participate only in the printable-ASCII range
-  *    where the stats writer, the driver compare and Spark's UTF8
-  *    ordering agree (see [[VersionedTableOps.filesForRangeString]]).
+  *  - strings compare in unsigned UTF-8 byte order
+  *    ([[ZoneMapFilters.utf8Cmp]]), the order of parquet's binary
+  *    stats and of Spark's string comparison; the stats writer only
+  *    indexes printable-ASCII bounds.
   */
-class ZoneMapFileIndex(spark: SparkSession, ops: VersionedTableOps,
-    table: String, relFiles: Seq[String], dataSchema: StructType,
-    bloomDecl: Set[String]) extends FileIndex {
+class ZoneMapFileIndex(ops: VersionedTableOps, table: String,
+    relFiles: Seq[String], bloomDecl: Set[String]) extends FileIndex {
 
   // resolved once: the snapshot is immutable, the statuses are stable
   private val statusByRel: Seq[(String, FileStatus)] = relFiles.map { f =>
@@ -65,47 +68,31 @@ class ZoneMapFileIndex(spark: SparkSession, ops: VersionedTableOps,
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val (num, str, nul, pts) = ZoneMapFilters.constraints(dataFilters)
-    val zoneKept =
-      if (num.isEmpty && str.isEmpty && nul.isEmpty) relFiles
-      else ops.keepByZoneMaps(table, relFiles, num, str, nul)
-    // bloom skipping composes AFTER the zone maps: sidecars are read
-    // only for interval survivors, and only for the columns the
-    // snapshot declares (`bloomDecl`, physical names — like the
-    // filter names here, since the scan's schema is physical)
-    val probes = pts.collect { case (c, lits) if bloomDecl.contains(c) =>
-      (c, lits.map(BloomSkipIndex.hashLiteral)) }
-    val kept =
-      if (probes.isEmpty) zoneKept
-      else ops.keepByBlooms(table, zoneKept, probes)
-    val keptSet = kept.toSet
+    val kept = ops.keptFiles(table, relFiles, bloomDecl, dataFilters).toSet
     Seq(PartitionDirectory(InternalRow.empty,
-      statusByRel.collect { case (f, st) if keptSet(f) => st }.toArray))
+      statusByRel.collect { case (f, st) if kept(f) => st }.toArray))
   }
 }
 
-/** The conservative Catalyst-predicate → zone-map-interval
-  * translation (scaladoc on [[ZoneMapFileIndex]]), factored out so
-  * the COW [[VersionedTableOps.delete]]/[[VersionedTableOps.update]]
-  * path prunes the files it must rewrite with the SAME rules the
-  * automatic read path prunes the files it must open.
+/** The conservative Catalyst-predicate → zone-map translation
+  * (scaladoc on [[ZoneMapFileIndex]]) — the first step of the one
+  * pruning kernel, [[VersionedTableOps.keptFiles]].
   */
 private[sources] object ZoneMapFilters {
 
   /** One conjunctive interval per constrained column: numeric ranges
-    * in the stats double domain, string ranges in the printable-
-    * ASCII domain, NULLNESS probes (col, wantNull) from IS NULL /
-    * IS NOT NULL conjuncts — skipped on the committed per-file null
-    * counts (a comparison filter's implied isnotnull skips ALL-NULL
-    * files; an explicit isNull probe skips every fully-populated
-    * file) — and EQUALITY POINT probes for the bloom sidecars: each
-    * `col = lit` / `col <=> lit` / all-literal `IN` conjunct yields
-    * one (col, disjunctive literal list) entry (a file must satisfy
-    * every conjunct; within one IN, any listed value suffices).
-    * Points are EXTRA precision over the interval the same conjunct
-    * already contributed — the zone map keeps boundary files whose
-    * range covers the value, the bloom drops the ones that provably
-    * never held it. Untranslatable predicates constrain nothing.
+    * in the stats double domain, string ranges in UTF-8 byte order,
+    * NULLNESS probes (col, wantNull) from IS NULL / IS NOT NULL
+    * conjuncts — skipped on the committed per-file null counts (a
+    * comparison filter's implied isnotnull skips ALL-NULL files; an
+    * explicit isNull probe skips every fully-populated file) — and
+    * EQUALITY POINT lists: each `col = lit` / `col <=> lit` /
+    * all-literal `IN` conjunct yields one (col, disjunctive literal
+    * list) entry (a file must satisfy every conjunct; within one IN,
+    * any listed value suffices). The zone maps keep a file only if a
+    * listed value lies in its [min, max]; the bloom sidecars then
+    * drop the files that provably never held one. Untranslatable
+    * predicates constrain nothing.
     */
   def constraints(filters: Seq[Expression]):
       (Seq[(String, Double, Double)], Seq[(String, String, String)],
@@ -123,7 +110,7 @@ private[sources] object ZoneMapFilters {
   /** Literal → stats double domain (see VersionedTableOps.statBounds
     * for the per-type units), or None for unindexable literal types.
     */
-  private def litNum(l: Literal): Option[Double] = Option(l.value).flatMap { v =>
+  def litNum(l: Literal): Option[Double] = Option(l.value).flatMap { v =>
     l.dataType match {
       case ByteType | ShortType | IntegerType | LongType =>
         Some(v.asInstanceOf[Number].doubleValue())
@@ -136,9 +123,28 @@ private[sources] object ZoneMapFilters {
     }
   }
 
-  private def litStr(l: Literal): Option[String] = Option(l.value).collect {
+  def litStr(l: Literal): Option[String] = Option(l.value).collect {
     case s: org.apache.spark.unsafe.types.UTF8String => s.toString
-  }.filter(_.forall(c => c >= ' ' && c <= '~'))
+  }
+
+  /** Unsigned UTF-8 byte order — the ONE ordering parquet binary
+    * stats, Spark's UTF8String comparisons and the committed string
+    * zone maps all agree on. Java String.compareTo (UTF-16 code
+    * units) diverges from it for supplementary characters, so every
+    * driver-side string compare goes through this, never compareTo.
+    */
+  def utf8Cmp(a: String, b: String): Int = {
+    val x = a.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val y = b.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    var i = 0
+    val n = math.min(x.length, y.length)
+    while (i < n) {
+      val c = (x(i) & 0xff) - (y(i) & 0xff)
+      if (c != 0) return c
+      i += 1
+    }
+    x.length - y.length
+  }
 
   // string interval sentinels: "" is <= every string, and a lone DEL
   // (0x7f) is > every PRINTABLE-ASCII string (first char of any
@@ -156,11 +162,9 @@ private[sources] object ZoneMapFilters {
     * and prunes nothing.
     */
   private object NamedCol {
-    def unapply(e: Expression): Option[(String, DataType)] = e match {
-      case a: AttributeReference => Some((a.name, a.dataType))
-      case g: GetStructField =>
-        unapply(g.child).map { case (p, _) =>
-          (p + "." + g.extractFieldName, g.dataType) }
+    def unapply(e: Expression): Option[String] = e match {
+      case a: AttributeReference => Some(a.name)
+      case g: GetStructField => unapply(g.child).map(_ + "." + g.extractFieldName)
       case _ => None
     }
   }
@@ -178,7 +182,7 @@ private[sources] object ZoneMapFilters {
       }
       litStr(l).foreach { v =>
         val cur = str.getOrElse(name, (StrMin, StrMax))
-        str(name) = (if (cur._1 >= v) cur._1 else v, cur._2)
+        str(name) = (if (utf8Cmp(cur._1, v) >= 0) cur._1 else v, cur._2)
       }
     }
     def upper(name: String, l: Literal): Unit = {
@@ -189,15 +193,14 @@ private[sources] object ZoneMapFilters {
       }
       litStr(l).foreach { v =>
         val cur = str.getOrElse(name, (StrMin, StrMax))
-        str(name) = (cur._1, if (cur._2 <= v) cur._2 else v)
+        str(name) = (cur._1, if (utf8Cmp(cur._2, v) <= 0) cur._2 else v)
       }
     }
-    // equality points (bloom probes): non-null literals only — `c =
-    // NULL` is never true and never reaches here as a data filter
-    def point(name: String, ls: Seq[Literal]): Unit = {
-      val nonNull = ls.filter(_.value != null)
-      if (nonNull.nonEmpty && nonNull.size == ls.size) pts += ((name, nonNull))
-    }
+    // equality points: non-null literals only — `c = NULL` is never
+    // true and never reaches here as a data filter. An EMPTY list (a
+    // keyed merge's all-null batch) matches nothing
+    def point(name: String, ls: Seq[Literal]): Unit =
+      if (ls.forall(_.value != null)) pts += ((name, ls))
     e match {
       case And(l, r) =>
         collectConstraints(l, num, str, nul, pts)
@@ -207,70 +210,45 @@ private[sources] object ZoneMapFilters {
       // (the predicate selects nothing); keeping either probe is sound.
       // For a nested field the leaf null count includes ancestor-null
       // rows — exactly what `s.a IS NULL` evaluates to
-      case IsNull(NamedCol(n, _)) => nul(n) = true
-      case IsNotNull(NamedCol(n, _)) => nul(n) = false
+      case IsNull(NamedCol(n)) => nul(n) = true
+      case IsNotNull(NamedCol(n)) => nul(n) = false
       // strict bounds relaxed to inclusive — pruning only, the exact
       // predicate still runs on the survivors
-      case GreaterThan(NamedCol(n, _), l: Literal) => lower(n, l)
-      case GreaterThanOrEqual(NamedCol(n, _), l: Literal) => lower(n, l)
-      case LessThan(NamedCol(n, _), l: Literal) => upper(n, l)
-      case LessThanOrEqual(NamedCol(n, _), l: Literal) => upper(n, l)
-      case EqualTo(NamedCol(n, _), l: Literal) =>
-        lower(n, l); upper(n, l); point(n, Seq(l))
-      case GreaterThan(l: Literal, NamedCol(n, _)) => upper(n, l)
-      case GreaterThanOrEqual(l: Literal, NamedCol(n, _)) => upper(n, l)
-      case LessThan(l: Literal, NamedCol(n, _)) => lower(n, l)
-      case LessThanOrEqual(l: Literal, NamedCol(n, _)) => lower(n, l)
-      case EqualTo(l: Literal, NamedCol(n, _)) =>
-        lower(n, l); upper(n, l); point(n, Seq(l))
+      case GreaterThan(NamedCol(n), l: Literal) => lower(n, l)
+      case GreaterThanOrEqual(NamedCol(n), l: Literal) => lower(n, l)
+      case LessThan(NamedCol(n), l: Literal) => upper(n, l)
+      case LessThanOrEqual(NamedCol(n), l: Literal) => upper(n, l)
+      case GreaterThan(l: Literal, NamedCol(n)) => upper(n, l)
+      case GreaterThanOrEqual(l: Literal, NamedCol(n)) => upper(n, l)
+      case LessThan(l: Literal, NamedCol(n)) => lower(n, l)
+      case LessThanOrEqual(l: Literal, NamedCol(n)) => lower(n, l)
+      case EqualTo(NamedCol(n), l: Literal) => point(n, Seq(l))
+      case EqualTo(l: Literal, NamedCol(n)) => point(n, Seq(l))
       // null-safe equality with a NON-NULL literal matches exactly the
-      // rows plain equality does (null rows match neither), so it
-      // carries the same range and point; the null-literal form is a
-      // pure IS NULL — the nullness probe, no range, no point
-      case EqualNullSafe(NamedCol(n, _), l: Literal) =>
-        if (l.value == null) nul(n) = true
-        else { lower(n, l); upper(n, l); point(n, Seq(l)) }
-      case EqualNullSafe(l: Literal, NamedCol(n, _)) =>
-        if (l.value == null) nul(n) = true
-        else { lower(n, l); upper(n, l); point(n, Seq(l)) }
-      // IN-list: widened to one [min, max] envelope per column — the
-      // zone-map framework holds ONE interval per column, so the
-      // envelope is the tightest sound translation (gaps between list
-      // points are re-filtered by the untouched predicate). Only
-      // all-literal, non-empty lists with no null translate.
-      case In(NamedCol(n, _), vs) if vs.nonEmpty &&
-          vs.forall(v => v.isInstanceOf[Literal] &&
-            v.asInstanceOf[Literal].value != null) =>
-        val lits = vs.map(_.asInstanceOf[Literal])
-        val nums = lits.flatMap(l => litNum(l).map(_ -> l))
-        val strs = lits.flatMap(l => litStr(l).map(_ -> l))
-        if (nums.size == lits.size) {
-          lower(n, nums.minBy(_._1)._2); upper(n, nums.maxBy(_._1)._2)
-        } else if (strs.size == lits.size) {
-          lower(n, strs.minBy(_._1)._2); upper(n, strs.maxBy(_._1)._2)
-        }
-        point(n, lits) // blooms fill the envelope's gaps exactly
+      // rows plain equality does (null rows match neither), so it is
+      // the same point; the null-literal form is a pure IS NULL — the
+      // nullness probe, no point
+      case EqualNullSafe(NamedCol(n), l: Literal) =>
+        if (l.value == null) nul(n) = true else point(n, Seq(l))
+      case EqualNullSafe(l: Literal, NamedCol(n)) =>
+        if (l.value == null) nul(n) = true else point(n, Seq(l))
+      // IN-list: one point list. Only all-literal lists with no null
+      // translate
+      case In(NamedCol(n), vs) if vs.forall(_.isInstanceOf[Literal]) =>
+        point(n, vs.map(_.asInstanceOf[Literal]))
       // long IN-lists arrive optimized to InSet (internal values, no
-      // Literal wrappers) — same envelope translation
-      case InSet(NamedCol(n, dt), hset) if hset.nonEmpty && !hset.contains(null) =>
-        val lits = hset.toSeq.map(v => Literal(v, dt))
-        val nums = lits.flatMap(l => litNum(l).map(_ -> l))
-        val strs = lits.flatMap(l => litStr(l).map(_ -> l))
-        if (nums.size == lits.size) {
-          lower(n, nums.minBy(_._1)._2); upper(n, nums.maxBy(_._1)._2)
-        } else if (strs.size == lits.size) {
-          lower(n, strs.minBy(_._1)._2); upper(n, strs.maxBy(_._1)._2)
-        }
-        point(n, lits)
-      // prefix probe: startsWith(p) ⊆ [p, p + DEL) in the printable-
-      // ASCII stats domain (DEL > every printable char, so p++DEL
-      // upper-bounds every p-prefixed string the writer indexed)
-      case StartsWith(NamedCol(n, _), l: Literal) =>
+      // Literal wrappers) — the same point list
+      case InSet(c @ NamedCol(n), hset) =>
+        point(n, hset.toSeq.map(v => Literal(v, c.dataType)))
+      // prefix probe: startsWith(p) ⊆ [p, p + DEL) against printable-
+      // ASCII stats (DEL > every printable char, so p++DEL upper-bounds
+      // every p-prefixed string the writer indexed)
+      case StartsWith(NamedCol(n), l: Literal) =>
         litStr(l).filter(_.nonEmpty).foreach { p =>
           val cur = str.getOrElse(n, (StrMin, StrMax))
           val hi = p + StrMax
-          str(n) = (if (cur._1 >= p) cur._1 else p,
-            if (cur._2 <= hi) cur._2 else hi)
+          str(n) = (if (utf8Cmp(cur._1, p) >= 0) cur._1 else p,
+            if (utf8Cmp(cur._2, hi) <= 0) cur._2 else hi)
         }
       case _ => () // not translatable: prunes nothing
     }

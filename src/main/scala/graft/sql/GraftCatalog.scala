@@ -39,7 +39,7 @@ import graft.sources.{VersionedTable, VersionedTableOps}
   * Read path: `loadTable` pins the table's CURRENT version (so one
   * statement referencing a table twice sees one snapshot), and the
   * [[GraftSqlRule]] resolution rule swaps the DSv2 relation for
-  * [[VersionedTableOps.readIndexed]]'s plan — a parquet file-source
+  * [[VersionedTableOps.read]]'s plan — a parquet file-source
   * relation over [[graft.sources.ZoneMapFileIndex]], so query
   * predicates prune manifest files at PLANNING time and the scan
   * keeps every file-source optimization (parquet pushdown on
@@ -655,7 +655,7 @@ class GraftSqlTable(val ops: VersionedTableOps, val path: String,
     */
   def resolve(spark: SparkSession): org.apache.spark.sql.DataFrame =
     GraftMatView.derivedRead(path,
-      ops.readIndexed(spark, path, Some(pinnedVersion)))
+      ops.read(spark, path, Some(pinnedVersion)))
 
   /** INSERT INTO → append; INSERT OVERWRITE (truncating) → overwrite.
     * The V1Write fallback hands the fully-analyzed insert frame to
@@ -737,7 +737,7 @@ object GraftSqlTable {
 }
 
 /** Resolution rule: DSv2 relation over a [[GraftSqlTable]] → the
-  * pinned version's [[VersionedTableOps.readIndexed]] plan, with a
+  * pinned version's [[VersionedTableOps.read]] plan, with a
   * Project re-binding the relation's attribute ids onto the
   * replacement's output so every already-resolved reference upstream
   * keeps resolving.
@@ -777,7 +777,7 @@ object GraftSqlRule {
   import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
   /** The relation swap both entry points share: DSv2 relation over a
-    * [[GraftSqlTable]] → the pinned version's readIndexed plan, with
+    * [[GraftSqlTable]] → the pinned version's read plan, with
     * a Project re-binding the relation's attribute ids onto the
     * replacement's output so already-resolved upstream references
     * keep resolving.

@@ -16,7 +16,7 @@ import graft.sql.GraftCatalog
   * layout (keys hash-scattered so each file covers the full range),
   * declares the index, and pins: the declaration commit + carry
   * semantics, skipping through the EXPLICIT probes and through a
-  * plain `.filter()` on [[VersionedTable.readIndexed]] (Catalyst
+  * plain `.filter()` on [[VersionedTable.read]] (Catalyst
   * planning path), exactness under false positives, conservative
   * keeps for unindexed files, rename interplay, COW-delete rewrite
   * pruning, and the refusals. Backend-abstract like the
@@ -103,21 +103,21 @@ abstract class BloomIndexBattery(backend: String, ops: VersionedTableOps)
     val t = fresh("autopoints")
     scattered(t)
     ops.setBloomIndex(spark, t, Seq(("k", 0.001)))
-    val all = scannedFiles(ops.readIndexed(spark, t))
-    val eq = ops.readIndexed(spark, t).filter(col("k") === 1234L)
+    val all = scannedFiles(ops.read(spark, t))
+    val eq = ops.read(spark, t).filter(col("k") === 1234L)
     assert(eq.collect().map(_.getLong(0)).toSeq === Seq(1234L))
     assert(scannedFiles(eq) < all / 2,
       "a plain .filter(col === x) must bloom-prune at planning time")
-    val inl = ops.readIndexed(spark, t).filter(col("k").isin(300L, 301L, 1234L))
+    val inl = ops.read(spark, t).filter(col("k").isin(300L, 301L, 1234L))
     assert(inl.collect().map(_.getLong(0)).toSet === Set(300L, 301L, 1234L))
     assert(scannedFiles(inl) < all / 2, "IN probes bloom-prune too")
     // a long IN-list arrives optimized to InSet — same points
-    val inset = ops.readIndexed(spark, t).filter(col("k").isin(0L to 14L: _*))
+    val inset = ops.read(spark, t).filter(col("k").isin(0L to 14L: _*))
     assert(inset.count() === 15)
     assert(scannedFiles(inset) < all, "InSet probes bloom-prune")
     // conjunction with an untranslatable residue still prunes on the
     // translatable equality half and stays exact
-    val conj = ops.readIndexed(spark, t)
+    val conj = ops.read(spark, t)
       .filter(col("k") === 1234L && col("s").contains("23"))
     assert(conj.count() === 1)
     assert(scannedFiles(conj) < all / 2)
@@ -128,7 +128,7 @@ abstract class BloomIndexBattery(backend: String, ops: VersionedTableOps)
     scattered(t)
     ops.setBloomIndex(spark, t, Seq(("k", 0.001)))
     val v = ops.versions(t).last
-    val pinned = ops.readIndexed(spark, t, Some(v))
+    val pinned = ops.read(spark, t, Some(v))
     // a later append carries v's files forward, so the vacuum keeps
     // them while it drops v's manifest
     ops.append(spark, t, spark.range(100000, 100010).select(col("id").as("k"))
@@ -189,7 +189,7 @@ abstract class BloomIndexBattery(backend: String, ops: VersionedTableOps)
       "the declaration reads back under the logical name")
     val (kept, tot) = ops.filesForPoints(t, "kk", Seq(1234L))
     assert(kept.size < tot / 2, "probe under the NEW name reaches the old sidecars")
-    val eq = ops.readIndexed(spark, t).filter(col("kk") === 1234L)
+    val eq = ops.read(spark, t).filter(col("kk") === 1234L)
     assert(eq.count() === 1)
     assert(scannedFiles(eq) < tot / 2, "automatic path translates too")
   }

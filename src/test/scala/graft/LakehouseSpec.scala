@@ -317,35 +317,35 @@ class LakehouseSpec extends SparkSpec {
           s.metrics("numFiles").value
       }.get
     }
-    val all = scannedFiles(VersionedTable.readIndexed(spark, t))
+    val all = scannedFiles(VersionedTable.read(spark, t))
     assert(all >= 3, "three commits stage at least three files")
     // numeric range: NO readRange call — the filter itself prunes
-    val ranged = VersionedTable.readIndexed(spark, t).filter(col("k").between(1100, 1200))
+    val ranged = VersionedTable.read(spark, t).filter(col("k").between(1100, 1200))
     assert(ranged.collect().map(_.getLong(0)).toSet === (1100L to 1200L).toSet)
     assert(scannedFiles(ranged) < all, "planning must skip non-intersecting files")
     // equality probe prunes the same way
-    assert(scannedFiles(VersionedTable.readIndexed(spark, t).filter(col("k") === 42)) < all)
+    assert(scannedFiles(VersionedTable.read(spark, t).filter(col("k") === 42)) < all)
     // string predicate prunes on the string zone maps
-    val strd = VersionedTable.readIndexed(spark, t)
+    val strd = VersionedTable.read(spark, t)
       .filter(col("s") >= "b" && col("s") < "b~")
     assert(strd.count() === 500)
     assert(scannedFiles(strd) < all)
     // a non-translatable predicate prunes nothing but stays exact
-    val opaque = VersionedTable.readIndexed(spark, t).filter(col("k") % 7 === 0)
+    val opaque = VersionedTable.read(spark, t).filter(col("k") % 7 === 0)
     assert(opaque.count() ===
       VersionedTable.read(spark, t).filter(col("k") % 7 === 0).count())
     assert(scannedFiles(opaque) === all)
     // IN-list envelope prunes (points all inside one commit's range)
-    val inl = VersionedTable.readIndexed(spark, t).filter(col("k").isin(1101, 1150, 1199))
+    val inl = VersionedTable.read(spark, t).filter(col("k").isin(1101, 1150, 1199))
     assert(inl.collect().map(_.getLong(0)).toSet === Set(1101L, 1150L, 1199L))
     assert(scannedFiles(inl) < all, "IN envelope must prune the outer commits")
     // a long IN-list arrives as InSet — same envelope
-    val inset = VersionedTable.readIndexed(spark, t)
+    val inset = VersionedTable.read(spark, t)
       .filter(col("k").isin(1100L to 1120L: _*))
     assert(inset.count() === 21)
     assert(scannedFiles(inset) < all, "InSet envelope must prune")
     // string prefix probe: s values are '<era>-<id>' per commit
-    val pre = VersionedTable.readIndexed(spark, t).filter(col("s").startsWith("b-1"))
+    val pre = VersionedTable.read(spark, t).filter(col("s").startsWith("b-1"))
     assert(pre.count() ===
       VersionedTable.read(spark, t).filter(col("s").startsWith("b-1")).count())
     assert(scannedFiles(pre) < all, "prefix interval must prune")
@@ -371,19 +371,19 @@ class LakehouseSpec extends SparkSpec {
           s.metrics("numFiles").value
       }.get
     }
-    val all = scannedFiles(VersionedTable.readIndexed(spark, t))
+    val all = scannedFiles(VersionedTable.read(spark, t))
     // IS NULL skips the fully-populated commit's files
-    val isNull = VersionedTable.readIndexed(spark, t).filter(col("v").isNull)
+    val isNull = VersionedTable.read(spark, t).filter(col("v").isNull)
     assert(isNull.count() === 500)
     assert(scannedFiles(isNull) < all, "IS NULL must skip fully-populated files")
     // IS NOT NULL skips the all-null commit's files
-    val notNull = VersionedTable.readIndexed(spark, t).filter(col("v").isNotNull)
+    val notNull = VersionedTable.read(spark, t).filter(col("v").isNotNull)
     assert(notNull.count() === 400)
     assert(scannedFiles(notNull) < all, "IS NOT NULL must skip all-null files")
     // the isnotnull Catalyst INFERS from a comparison prunes the
     // all-null commit too — even though that commit has no [min, max]
     // interval for v at all (no non-null value to index)
-    val cmp = VersionedTable.readIndexed(spark, t).filter(col("v") >= 0L)
+    val cmp = VersionedTable.read(spark, t).filter(col("v") >= 0L)
     assert(cmp.count() === 400)
     assert(scannedFiles(cmp) < all,
       "inferred isnotnull must skip the interval-less all-null files")
@@ -435,7 +435,7 @@ class LakehouseSpec extends SparkSpec {
     assert(keptZB.size < totZ, s"z-order b-probe must skip (kept ${keptZB.size}/$totZ)")
     // semantics unchanged on both dimensions, including through the
     // automatic-skipping read path
-    assert(VersionedTable.readIndexed(spark, t, Some(vZ))
+    assert(VersionedTable.read(spark, t, Some(vZ))
       .filter(col("b").between(0, 255)).count() === 256)
     assert(VersionedTable.readRange(spark, t, "a", 0, 255, Some(vZ)).count() === 256)
     // nulls in a clustering column bin to the low edge, never crash
@@ -535,16 +535,16 @@ class LakehouseSpec extends SparkSpec {
           s.metrics("numFiles").value
       }.get
     }
-    val all = scannedFiles(VersionedTable.readIndexed(spark, t))
+    val all = scannedFiles(VersionedTable.read(spark, t))
     assert(all >= 3)
     // numeric nested range: the GetStructField chain translates to the
     // dotted interval and planning skips the outer commits
-    val ranged = VersionedTable.readIndexed(spark, t)
+    val ranged = VersionedTable.read(spark, t)
       .filter(col("info.m").between(2200, 2400))
     assert(ranged.collect().map(_.getLong(0)).toSet === (1100L to 1200L).toSet)
     assert(scannedFiles(ranged) < all, "nested numeric range must skip files")
     // nested string prefix probes the same way
-    val pre = VersionedTable.readIndexed(spark, t)
+    val pre = VersionedTable.read(spark, t)
       .filter(col("info.tag").startsWith("s-11"))
     val preWant = VersionedTable.read(spark, t)
       .filter(col("info.tag").startsWith("s-11")).count()
@@ -556,7 +556,7 @@ class LakehouseSpec extends SparkSpec {
     val (keptN, totalN) = VersionedTable.filesForNullness(t, "info.m", wantNull = true)
     assert(keptN.size < totalN, "a never-null nested field's IS NULL probe skips everything")
     // ARRAY columns: no stats written, filters stay correct and unpruned
-    val arrF = VersionedTable.readIndexed(spark, t)
+    val arrF = VersionedTable.read(spark, t)
       .filter(element_at(col("arr"), 1) === 1200L)
     assert(arrF.count() === 1)
     assert(scannedFiles(arrF) === all, "array predicates prune nothing (unindexed by design)")

@@ -300,7 +300,7 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
     assert(files(v0).subsetOf(files(vUpd)), "all original data files carried")
     assert(ops.rowCount(spark, t, Some(vUpd)) === 1350)
     // the automatic zone-map read path subtracts DVs too
-    val auto = ops.readIndexed(spark, t, Some(vUpd))
+    val auto = ops.read(spark, t, Some(vUpd))
     assert(auto.count() === 1350)
     assert(auto.filter(col("k") === 2450).head.getLong(1) === 2450 * 2 + 1)
     // CDC across a MoR delete is NOT an empty delta (the file list is
@@ -1105,9 +1105,9 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
           s.metrics("numFiles").value
       }.get
     }
-    val all = scannedFiles(ops.readIndexed(spark, tz))
+    val all = scannedFiles(ops.read(spark, tz))
     assert(all >= 8, "optimize must have produced a multi-file layout")
-    val pruned = ops.readIndexed(spark, tz).filter(col("k").between(100, 200))
+    val pruned = ops.read(spark, tz).filter(col("k").between(100, 200))
     assert(pruned.collect().map(_.getLong(0)).toSet === (100L to 200L).toSet)
     assert(scannedFiles(pruned) < all,
       "zone maps must prune on the physical stats keys of an id-mapped table")
@@ -1521,7 +1521,7 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
     val (kept, total) = ops.filesForRange(t, "metric", 0d, 30d)
     assert(kept.size < total, "a selective probe on the RENAMED name must skip files")
     // the automatic path prunes on a logical-name filter too
-    val cnt = ops.readIndexed(spark, t).filter(col("metric") < 30L).count()
+    val cnt = ops.read(spark, t).filter(col("metric") < 30L).count()
     assert(cnt === 10, "ids 0..9 of the first era have metric < 30")
     // CDC across the rename: the rename itself is an empty delta;
     // a range across it aligns names to the TO side
