@@ -22,7 +22,7 @@ object MapReduce {
   /** map → shuffle-by-key → reduce. Equivalent of one full reference
     * job (map + reduce stages).
     */
-  def run[I, K: Encoder, V: Encoder](input: Dataset[I])(
+  def run[I, K: Encoder, V](input: Dataset[I])(
       mapper: I => IterableOnce[(K, V)])(
       reducer: (V, V) => V)(implicit
       kv: Encoder[(K, V)]): Dataset[(K, V)] =

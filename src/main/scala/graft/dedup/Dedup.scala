@@ -3,7 +3,6 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
-import graft.functions.TextFunctions._
 import graft.plans.VectorExpressions.dotNative
 
 /** Document deduplication operators (SURVEY.md §2.3).

@@ -300,7 +300,7 @@ object Bpe {
     * only that pass. Every skipped rank's pair provably did not occur,
     * so skipping it is exactly what the chain would have done. Cost:
     * O(len²) hash lookups + O(len) pass work per word, FLAT in k —
-    * ProbeRound10 measures ~constant per-token cost at k = 128 / 1024
+    * SURVEY.md round-10 probe measures ~constant per-token cost at k = 128 / 1024
     * / 8192 where the chain is linear in k (and un-compilable long
     * before 32k). A pair learned at several ranks (re-formed by later
     * merges) keeps ALL its ranks, replaying each chain pass.

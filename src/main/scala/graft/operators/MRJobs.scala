@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.TextFunctions._
 
 /** The reference's MapReduce job surface re-expressed over the driver
   * testdata (SURVEY.md §2.1). Word count / sort / grep / inverted

@@ -934,8 +934,8 @@ object VersionedQueries {
     val all = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice").cast("decimal(12,2)").as("price"))
-    VersionedTable.overwritePartitioned(spark, fact, all, Seq("o_orderpriority"))
-    VersionedTable.overwritePartitioned(spark, dim,
+    VersionedTable.overwritePartitioned(fact, all, Seq("o_orderpriority"))
+    VersionedTable.overwritePartitioned(dim,
       all.select(col("o_orderpriority")).distinct()
         .withColumn("pr", substring(col("o_orderpriority"), 1, 1)),
       Seq("o_orderpriority"))
@@ -969,7 +969,7 @@ object VersionedQueries {
     val o = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority").as("prio"),
         col("o_totalprice").cast("decimal(12,2)").as("price"))
-    VersionedTable.overwriteIdMapped(spark, table,
+    VersionedTable.overwriteIdMapped(table,
       o.filter(col("o_orderkey") % 2 === 0))
     require(VersionedTable.columnMapping(table) == "id")
     val before = VersionedTable.snapshotFiles(table).toSet
@@ -998,8 +998,8 @@ object VersionedQueries {
     val all = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice").cast("decimal(12,2)").as("price"))
-    VersionedTable.overwritePartitioned(spark, fact, all, Seq("o_orderpriority"))
-    VersionedTable.overwritePartitioned(spark, dim,
+    VersionedTable.overwritePartitioned(fact, all, Seq("o_orderpriority"))
+    VersionedTable.overwritePartitioned(dim,
       all.select(col("o_orderpriority")).distinct()
         .withColumn("pr", substring(col("o_orderpriority"), 1, 1)),
       Seq("o_orderpriority"))
@@ -1149,7 +1149,7 @@ object VersionedQueries {
     val all = t(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderpriority"),
         col("o_totalprice").cast("decimal(12,2)").as("price"))
-    VersionedTable.overwritePartitioned(spark, table,
+    VersionedTable.overwritePartitioned(table,
       all.filter(col("o_orderkey") % 2 === 0), Seq("o_orderpriority"))
     VersionedTable.append(spark, table, all.filter(col("o_orderkey") % 2 =!= 0))
     val (kept, total) = VersionedTable.filesForPartition(table, "o_orderpriority", "1-URGENT")

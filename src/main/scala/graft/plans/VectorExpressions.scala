@@ -246,7 +246,7 @@ case class NearestCentroid(child: Expression, centroids: Array[Double],
   * O(K log nProbe) per row (round 12; the previous repeated-minimum
   * scan was O(K·nProbe) — ~2×10⁹ ops/row at the two-level
   * quantizer's 2^18-list ceiling with nProbe = K/32, measured 605×
-  * slower there, ProbeRound12). Allocation: two nProbe-sized
+  * slower there, SURVEY.md round-12 probe). Allocation: two nProbe-sized
   * primitive arrays per row, spec-pinned identical output against
   * the UDF at K up to 512 with dense ties (VectorAssignSpec).
   */

@@ -267,7 +267,7 @@ object Ann {
   /** Probe width once two-level has engaged: ~3% of the lists — the
     * flat 3/8 fraction would re-scan most of the corpus at 10⁴+ lists.
     *
-    * Recall band (ProbeRound13, 10⁶-corpus sensitivity sweep): this
+    * Recall band (SURVEY.md round-13 probe, 10⁶-corpus sensitivity sweep): this
     * rule holds recall@5 = 1.000 down to HALF the well-separated
     * probe corpus's cluster separation and below (signal-to-noise
     * ≥ 1.75); decay starts at the noise floor — SNR ≈ 1 reads 0.78 at
@@ -652,7 +652,7 @@ object Ann {
     * unlike IVF the appended index is IDENTICAL to a full rebuild,
     * spec-pinned).
     */
-  def appendToBinaryIndex(spark: SparkSession, indexPath: String, newVecs: DataFrame): Unit =
+  def appendToBinaryIndex(indexPath: String, newVecs: DataFrame): Unit =
     newVecs.select(col("vec_id"),
         signBitsNative(normalizeNative(col("embedding"))).as("w"))
       .write.mode("append").parquet(indexPath)
@@ -874,7 +874,6 @@ object Ann {
     */
   def pqTopK(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
       nCand: Int = -1, nSub: Int = 8, ksub: Int = -1): DataFrame = {
-    val sub = 64 / nSub
     // trainPq drives three actions over the corpus (seed collect +
     // two Lloyd aggregates) before the code pass — cache like the
     // sibling quantizer paths, release once codes materialize
@@ -913,7 +912,6 @@ object Ann {
   def ivfpqTopK(spark: SparkSession, dir: String, nQueries: Int = 10, k: Int = 5,
       kCentroids: Int = -1, nProbe: Int = -1, nCand: Int = -1, nSub: Int = 8,
       ksub: Int = -1): DataFrame = {
-    val sub = 64 / nSub
     val corpus = emb(spark, dir).cache()
     val n = if (kCentroids > 0 && nCand > 0 && ksub > 0) -1L else corpus.count()
     val kS = if (ksub > 0) ksub else ksubFor(n)
@@ -968,7 +966,6 @@ object Ann {
   def buildIvfPqIndex(spark: SparkSession, dir: String, indexPath: String,
       kCentroids: Int = -1, nSub: Int = 8, ksub: Int = -1): Unit = {
     import spark.implicits._
-    val sub = 64 / nSub
     val corpus = emb(spark, dir).cache()
     val n = if (kCentroids > 0 && ksub > 0) -1L else corpus.count()
     val kC = if (kCentroids > 0) kCentroids else kCentroidsFor(n)
@@ -1011,7 +1008,6 @@ object Ann {
     val ksub = bookRows.map(r => r.getInt(r.fieldIndex("cid"))).max + 1
     require(persistedNSub == nSub,
       s"index at $indexPath was built with nSub=$persistedNSub, caller passed $nSub")
-    val sub = 64 / nSub
     val books = Array.ofDim[Array[Double]](nSub, ksub)
     bookRows.foreach { r =>
       books(r.getInt(r.fieldIndex("m")))(r.getInt(r.fieldIndex("cid"))) =
@@ -1048,7 +1044,7 @@ object Ann {
     * hot path runs the codegen twin SignBits
     * (plans/VectorExpressions.scala), pinned bit-exact against this
     * in VectorAssignSpec — measured 7.7× on the isolated pass
-    * (ProbeRound12).
+    * (SURVEY.md round-12 probe).
     */
   private[graft] val signBitsUdf = udf { (v: Seq[Double]) =>
     var w = 0L

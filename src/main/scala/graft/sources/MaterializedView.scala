@@ -530,7 +530,7 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
     val bTxns = txns :+ (bucketsApp(viewKey) -> buckets.toLong)
     val bc = bucketExpr(keyCols, buckets)
     if (!hasState)
-      return vt.overwritePartitioned(spark, view,
+      return vt.overwritePartitioned(view,
         deltaAgg.filter(col("mv_count") > 0).withColumn(BucketCol, bc),
         Seq(BucketCol), txns = bTxns,
         // first refresh writes up to `buckets` value dirs — spread the
@@ -723,7 +723,7 @@ class MaterializedViewOps(val vt: VersionedTableOps) {
           col(s"__ins_max_$c").as(s"mv_max_$c")))): _*)
         .filter(col("mv_count") > 0)
       return if (b == 0) vt.overwriteTxns(spark, view, init, txns)
-        else vt.overwritePartitioned(spark, view,
+        else vt.overwritePartitioned(view,
           init.withColumn(BucketCol, bucketExpr(keyCols, b)),
           Seq(BucketCol), txns = txns)
     }

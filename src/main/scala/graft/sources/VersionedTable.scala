@@ -982,7 +982,7 @@ class VersionedTableOps(val store: CommitStore) {
     * directory the move already left behind. Pinned READERS
     * re-resolve by path on their next file open.
     */
-  def renameTable(spark: SparkSession, from: String, to: String): Unit = {
+  def renameTable(from: String, to: String): Unit = {
     val head = headManifest(from)
     require(head.version > 0, s"no table at $from to rename")
     require(head.op != "drop_table",
@@ -1148,7 +1148,7 @@ class VersionedTableOps(val store: CommitStore) {
     * repartitioning an existing table is a rewrite, not a metadata
     * edit.
     */
-  def overwritePartitioned(spark: SparkSession, table: String, df: DataFrame,
+  def overwritePartitioned(table: String, df: DataFrame,
       partCols: Seq[String], idMapped: Boolean = false,
       txns: Seq[(String, Long)] = Nil,
       partWidth: Option[Int] = None): Long = {
@@ -1505,7 +1505,7 @@ class VersionedTableOps(val store: CommitStore) {
       case "left" => "left_outer"
       case "right" => "right_outer"
       case "full" | "" => "full_outer" // "outer" alone means full
-      case other => throw new IllegalArgumentException(
+      case _ => throw new IllegalArgumentException(
         s"joinPartitioned supports inner/left/right/full, not '$joinType'")
     }
     val (specL, specR) = (mL.partitionBy, mR.partitionBy)
@@ -1562,8 +1562,7 @@ class VersionedTableOps(val store: CommitStore) {
     * exactly Delta's `columnMapping.mode = id` trade. The mode is set
     * at creation and follows the table through every commit.
     */
-  def overwriteIdMapped(spark: SparkSession, table: String,
-      df: DataFrame): Long = {
+  def overwriteIdMapped(table: String, df: DataFrame): Long = {
     require(versions(table).isEmpty,
       s"$table already has commits: column mapping is set at creation")
     val layout = idLayout(Manifest(colMap = "id"), df.columns, retireAbsent = false)

@@ -273,10 +273,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     if (partCols.isEmpty) {
       // one empty partition → one zero-row parquet file, so version 0
       // is an ordinary manifest (no zero-file snapshot edge anywhere)
-      if (idMapped) ops.overwriteIdMapped(spark, path, empty.repartition(1))
+      if (idMapped) ops.overwriteIdMapped(path, empty.repartition(1))
       else ops.overwrite(spark, path, empty.repartition(1))
     } else
-      ops.overwritePartitioned(spark, path, empty, partCols, idMapped = idMapped)
+      ops.overwritePartitioned(path, empty, partCols, idMapped = idMapped)
     // Bloom index at birth (round 13): `TBLPROPERTIES
     // ('graft.bloom.columns' = 'c1,c2' [, 'graft.bloom.fpp' =
     // '0.001'])` declares the per-file equality-skipping index as a
@@ -377,7 +377,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces with ProcedureCa
     if (!isTable(from)) throw new NoSuchTableException(oldIdent)
     val to = tablePath(newIdent)
     if (ops.versions(to).nonEmpty) throw new TableAlreadyExistsException(newIdent)
-    ops.renameTable(SparkSession.active, from, to)
+    ops.renameTable(from, to)
   }
 
   // ---- ProcedureCatalog: SQL maintenance via CALL ----

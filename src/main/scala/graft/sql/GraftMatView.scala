@@ -464,8 +464,7 @@ object GraftMatView {
     * plus each SUM expression computed (re-parsed from its stored SQL
     * text) on the delta under its state suffix.
     */
-  private def deriveCols(spark: SparkSession,
-      d: MatViewDef): Seq[(String, org.apache.spark.sql.Column)] =
+  private def deriveCols(d: MatViewDef): Seq[(String, org.apache.spark.sql.Column)] =
     d.exprSums.map { case (nm, sql) =>
       nm -> org.apache.spark.sql.functions.expr(sql)
     } ++ d.avgCols.map(c => nnCol(c) ->
@@ -505,17 +504,17 @@ object GraftMatView {
         mv.refreshJoinChain(spark, view, d.sources, d.chainKeys,
           d.keyCols, aggSumCols(d),
           viewKey = ViewKeyChain, where = d.whereSql, buckets = d.buckets,
-          derive = deriveCols(spark, d))
+          derive = deriveCols(d))
       case "join" =>
         mv.refreshJoin(spark, view, d.source, d.source2.getOrElse(
             sys.error(s"join view $view lost its second source")),
           d.joinKeys, d.keyCols, aggSumCols(d),
           viewKey = ViewKeyJoin, where = d.whereSql, buckets = d.buckets,
-          derive = deriveCols(spark, d))
+          derive = deriveCols(d))
       case _ =>
         mv.refresh(spark, view, d.source, d.keyCols, aggSumCols(d),
           viewKey = ViewKey, where = d.whereSql, buckets = d.buckets,
-          derive = deriveCols(spark, d))
+          derive = deriveCols(d))
     }
   }
 

@@ -51,17 +51,6 @@ abstract class BloomIndexBattery(backend: String, ops: VersionedTableOps)
     }
   }
 
-  private def scannedFiles(d: DataFrame): Long = {
-    d.collect()
-    val plan = d.queryExecution.executedPlan
-    val resolved = plan.collectFirst {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-    }.getOrElse(plan)
-    resolved.collectFirst {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.metrics("numFiles").value
-    }.get
-  }
 
   test(s"[$backend] blooms prune point lookups the zone maps cannot") {
     val t = fresh("points")
@@ -242,7 +231,7 @@ abstract class BloomIndexBattery(backend: String, ops: VersionedTableOps)
     val df = spark.range(0, 2000).select(col("id").as("k"),
       (col("id") % 4).cast("string").as("p"))
       .repartition(3, col("k"))
-    ops.overwritePartitioned(spark, t, df, Seq("p"))
+    ops.overwritePartitioned(t, df, Seq("p"))
     ops.setBloomIndex(spark, t, Seq(("k", 0.001)))
     val (kept, tot) = ops.filesForPoints(t, "k", Seq(1235L))
     assert(tot >= 4, "value-routed leaves hold multiple files")
@@ -368,7 +357,7 @@ abstract class BloomIndexBattery(backend: String, ops: VersionedTableOps)
 
   test(s"[$backend] a partitioned append writes its sidecars beside each leaf file") {
     val t = fresh("parts-append")
-    ops.overwritePartitioned(spark, t, spark.range(0, 400).select(col("id").as("k"),
+    ops.overwritePartitioned(t, spark.range(0, 400).select(col("id").as("k"),
       (col("id") % 4).cast("string").as("p")), Seq("p"))
     ops.setBloomIndex(spark, t, Seq(("k", 0.001)))
     assertIndexed(t, "partitioned append") {

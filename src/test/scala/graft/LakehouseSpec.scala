@@ -306,17 +306,6 @@ class LakehouseSpec extends SparkSpec {
       if (lo == 0L) VersionedTable.overwrite(spark, t, df)
       else VersionedTable.append(spark, t, df)
     }
-    def scannedFiles(d: org.apache.spark.sql.DataFrame): Long = {
-      d.collect()
-      val plan = d.queryExecution.executedPlan
-      val resolved = plan.collectFirst {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      }.getOrElse(plan)
-      resolved.collectFirst {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.metrics("numFiles").value
-      }.get
-    }
     val all = scannedFiles(VersionedTable.read(spark, t))
     assert(all >= 3, "three commits stage at least three files")
     // numeric range: NO readRange call — the filter itself prunes
@@ -360,17 +349,6 @@ class LakehouseSpec extends SparkSpec {
       .select(col("id").as("k"), col("id").as("v")))
     VersionedTable.append(spark, t, spark.range(600, 900)
       .select(col("id").as("k"), when(col("id") % 3 === 0, col("id")).as("v")))
-    def scannedFiles(d: org.apache.spark.sql.DataFrame): Long = {
-      d.collect()
-      val plan = d.queryExecution.executedPlan
-      val resolved = plan.collectFirst {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      }.getOrElse(plan)
-      resolved.collectFirst {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.metrics("numFiles").value
-      }.get
-    }
     val all = scannedFiles(VersionedTable.read(spark, t))
     // IS NULL skips the fully-populated commit's files
     val isNull = VersionedTable.read(spark, t).filter(col("v").isNull)
@@ -523,17 +501,6 @@ class LakehouseSpec extends SparkSpec {
         array(col("id"), col("id") + 1).as("arr"))
       if (lo == 0L) VersionedTable.overwrite(spark, t, df)
       else VersionedTable.append(spark, t, df)
-    }
-    def scannedFiles(d: org.apache.spark.sql.DataFrame): Long = {
-      d.collect()
-      val plan = d.queryExecution.executedPlan
-      val resolved = plan.collectFirst {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      }.getOrElse(plan)
-      resolved.collectFirst {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.metrics("numFiles").value
-      }.get
     }
     val all = scannedFiles(VersionedTable.read(spark, t))
     assert(all >= 3)

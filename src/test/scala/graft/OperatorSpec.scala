@@ -246,7 +246,7 @@ class OperatorSpec extends SparkSpec {
     all.filter(c("vec_id") >= 3).write.parquet(s"$tmp/embeddings.parquet")
     val idx2 = java.nio.file.Files.createTempDirectory("graft-bin-append").toString
     similarity.Ann.buildBinaryIndex(spark, tmp, idx2)
-    similarity.Ann.appendToBinaryIndex(spark, idx2, all.filter(c("vec_id") < 3))
+    similarity.Ann.appendToBinaryIndex(idx2, all.filter(c("vec_id") < 3))
     val rebuilt = spark.read.parquet(idx).collect().map(_.toSeq).toSet
     val appended = spark.read.parquet(idx2).collect().map(_.toSeq).toSet
     assert(appended === rebuilt, "appended index == full rebuild, bit for bit")

@@ -2,10 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
-import graft.sources.{InMemoryCommitStore, VersionedTable, VersionedTableOps, ZoneMapFileIndex}
+import graft.sources.{InMemoryCommitStore, VersionedTable, VersionedTableOps}
 
 /** The one file-pruning kernel, seen from its callers: the explicit
   * reads (`readRange`, `readRangeString`, `readPoints`), a plain
@@ -28,25 +26,6 @@ abstract class PruningKernelBattery(backend: String, ops: VersionedTableOps)
         _.iterator().asScala.toSeq.reverse.foreach(Files.delete))
     }
     p
-  }
-
-  /** Files the manifest-backed scans of a fresh execution of `d`'s
-    * plan listed (their `numFiles` metric). Fresh, because a frame
-    * that already ran keeps its file listing and re-running it resets
-    * the metric to 0.
-    */
-  private def scannedFiles(d: DataFrame): Long = {
-    val run = d.filter(lit(true))
-    run.collect()
-    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
-      case q: QueryStageExec => scans(q.plan)
-      case s: FileSourceScanExec => Seq(s)
-      case o => o.children.flatMap(scans)
-    }
-    scans(run.queryExecution.executedPlan)
-      .filter(_.relation.location.isInstanceOf[ZoneMapFileIndex])
-      .map(_.metrics("numFiles").value).sum
   }
 
   /** Three key-clustered commits (ids [0, 500), [1000, 1500),

@@ -22,18 +22,6 @@ class SqlCatalogSpec extends SparkSpec {
   private def rows(lo: Long, hi: Long): DataFrame =
     spark.range(lo, hi).select(col("id").as("k"), (col("id") * 10).as("v"))
 
-  private def scannedFiles(d: DataFrame): Long = {
-    d.collect()
-    val plan = d.queryExecution.executedPlan
-    val resolved = plan.collectFirst {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        a.executedPlan
-    }.getOrElse(plan)
-    resolved.collectFirst {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-        s.metrics("numFiles").value
-    }.get
-  }
 
   /** The full battery, parameterized on the ops backend: tests run it
     * once against the default POSIX catalog name and once against an
@@ -569,8 +557,7 @@ class SqlCatalogSpec extends SparkSpec {
     // table's partition spec, so the appended rows land value-routed
     // and partition-scoped file listings see them
     val ptable = s"$root/db/pt"
-    ops.overwritePartitioned(spark,
-      ptable, rows(0, 20).withColumn("grp", col("k") % 2), Seq("grp"))
+    ops.overwritePartitioned(ptable, rows(0, 20).withColumn("grp", col("k") % 2), Seq("grp"))
     spark.sql(s"INSERT INTO $catalog.db.pt " +
       "SELECT id AS k, id AS v, id % 2 AS grp FROM range(20, 40)")
     assert(spark.sql(s"SELECT count(*) AS n FROM $catalog.db.pt")
@@ -795,7 +782,7 @@ class SqlCatalogSpec extends SparkSpec {
     val root = freshRoot("expbase")
     val table = s"$root/db/t"
     val df = rows(0, 20).withColumn("grp", col("k") % 2)
-    val v1 = VersionedTable.overwritePartitioned(spark, table, df, Seq("grp"))
+    val v1 = VersionedTable.overwritePartitioned(table, df, Seq("grp"))
     VersionedTable.append(spark, table, rows(20, 30).withColumn("grp", col("k") % 2))
     val headBefore = VersionedTable.versions(table).last
     val ex = intercept[Exception] {
@@ -823,7 +810,7 @@ class SqlCatalogSpec extends SparkSpec {
     // partitioned on a column that is NOT a merge key: fallback too
     // (an update could move a row across partitions — unprovable)
     val off = s"${freshRoot("mk-off")}/db/t"
-    VersionedTable.overwritePartitioned(spark, off,
+    VersionedTable.overwritePartitioned(off,
       rows(0, 10).withColumn("grp", col("k") % 2), Seq("grp"))
     VersionedTable.mergeKeyed(spark, off,
       rows(5, 15).withColumn("grp", lit(0L)), Seq("k"),
@@ -833,7 +820,7 @@ class SqlCatalogSpec extends SparkSpec {
 
     // partition key among the merge keys: the scoped path engages
     val on = s"${freshRoot("mk-on")}/db/t"
-    VersionedTable.overwritePartitioned(spark, on,
+    VersionedTable.overwritePartitioned(on,
       rows(0, 10).withColumn("grp", col("k") % 2), Seq("grp"))
     val (g1Before, _) = VersionedTable.filesForPartition(on, "grp", "1")
     val upd = rows(0, 4).filter(col("k") % 2 === 0) // keys 0, 2 — grp-0 rows

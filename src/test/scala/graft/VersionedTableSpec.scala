@@ -708,10 +708,10 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
       concat(lit("P"), (col("id") % 3).cast("string")).as("p"),
       (col("id") * 2).as("v"))
     // creation takes the spec; a second spec-set is refused
-    ops.overwritePartitioned(spark, t, df, Seq("p"))
+    ops.overwritePartitioned(t, df, Seq("p"))
     assert(ops.partitionSpec(t) === Seq("p"))
     intercept[IllegalArgumentException] {
-      ops.overwritePartitioned(spark, t, df, Seq("p"))
+      ops.overwritePartitioned(t, df, Seq("p"))
     }
     // every file is value-routed; reads see ALL rows with p intact
     assert(ops.snapshotFiles(t).forall(_.split('/').exists(_.startsWith("p__pv="))))
@@ -817,8 +817,8 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
     def rowsB = spark.range(0, 3).select(
       concat(lit("P"), col("id").cast("string")).as("p"),
       (col("id") * 100).as("w"))
-    ops.overwritePartitioned(spark, a, rowsA, Seq("p"))
-    ops.overwritePartitioned(spark, b, rowsB, Seq("p"))
+    ops.overwritePartitioned(a, rowsA, Seq("p"))
+    ops.overwritePartitioned(b, rowsB, Seq("p"))
     val j = ops.joinPartitioned(spark, a, b, Seq("p"))
     val want = ops.read(spark, a).join(ops.read(spark, b), Seq("p"))
     assert(j.except(want).isEmpty && want.except(j).isEmpty,
@@ -832,7 +832,7 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
     assert(j2.count() === 180 - 30, "pair reads must subtract deletion vectors")
     // disjoint value sets: empty result, correct schema
     val c = freshTable("pj-c")
-    ops.overwritePartitioned(spark, c,
+    ops.overwritePartitioned(c,
       spark.range(0, 2).select(lit("QX").as("p"), col("id").as("w2")), Seq("p"))
     assert(ops.joinPartitioned(spark, a, c, Seq("p")).count() === 0)
     // beyond maxBranches the plan goes HYBRID (one pair for the
@@ -862,8 +862,8 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
       (col("id") * 7).as("w"))
     // k-clustered WITHIN each value dir: range-partition upstream so
     // every file's committed k interval is a narrow band
-    ops.overwritePartitioned(spark, a, rowsA.repartitionByRange(6, col("k")), Seq("p"))
-    ops.overwritePartitioned(spark, b, rowsB.repartitionByRange(6, col("k")), Seq("p"))
+    ops.overwritePartitioned(a, rowsA.repartitionByRange(6, col("k")), Seq("p"))
+    ops.overwritePartitioned(b, rowsB.repartitionByRange(6, col("k")), Seq("p"))
     val rl = Seq(("k", 200.0, 280.0))
     val rr = Seq(("k", 150.0, 300.0))
     // the evidence surface: fewer files opened than the tuples hold
@@ -908,7 +908,7 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
     val t = freshTable("idmap")
     def rows(lo: Long, hi: Long) = spark.range(lo, hi).select(
       col("id").as("k"), (col("id") * 2).as("v"), lit("A").as("tag"))
-    ops.overwriteIdMapped(spark, t, rows(0, 10))
+    ops.overwriteIdMapped(t, rows(0, 10))
     assert(ops.columnMapping(t) === "id")
     // data files store SYNTHETIC physical names, reads show logical
     val phys = spark.read.parquet(
@@ -966,7 +966,7 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
 
     // namespace guards: user columns may not squat the id namespace
     intercept[IllegalArgumentException] {
-      ops.overwriteIdMapped(spark, freshTable("idmap-bad"),
+      ops.overwriteIdMapped(freshTable("idmap-bad"),
         spark.range(1).select(col("id").as("__gcid_1")))
     }
     intercept[IllegalArgumentException] {
@@ -1068,7 +1068,7 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
       col("id").as("k"),
       concat(lit("P"), (col("id") % 4).cast("string")).as("p"),
       (col("id") * 3).as("v"))
-    ops.overwritePartitioned(spark, tp, prows(0, 100), Seq("p"), idMapped = true)
+    ops.overwritePartitioned(tp, prows(0, 100), Seq("p"), idMapped = true)
     assert(ops.columnMapping(tp) === "id")
     assert(ops.snapshotFiles(tp).forall(_.split('/').exists(s =>
       s.startsWith("__gcid_") && s.contains("__pv="))),
@@ -1091,20 +1091,9 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
     // zone maps prune id-mapped tables: the logical filter rewrites
     // through the read's alias to the physical stats key
     val tz = freshTable("idmap-zone")
-    ops.overwriteIdMapped(spark, tz,
+    ops.overwriteIdMapped(tz,
       spark.range(0, 3000).select(col("id").as("k"), (col("id") * 2).as("v")))
     ops.optimize(spark, tz, Seq("k"), nFiles = 8)
-    def scannedFiles(d: org.apache.spark.sql.DataFrame): Long = {
-      d.collect()
-      val plan = d.queryExecution.executedPlan
-      val resolved = plan.collectFirst {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
-      }.getOrElse(plan)
-      resolved.collectFirst {
-        case s: org.apache.spark.sql.execution.FileSourceScanExec =>
-          s.metrics("numFiles").value
-      }.get
-    }
     val all = scannedFiles(ops.read(spark, tz))
     assert(all >= 8, "optimize must have produced a multi-file layout")
     val pruned = ops.read(spark, tz).filter(col("k").between(100, 200))
@@ -1132,11 +1121,11 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
     // each table allocated a DIFFERENT physical id for it
     val ja = freshTable("idmap-join-a")
     val jb = freshTable("idmap-join-b")
-    ops.overwritePartitioned(spark, ja, spark.range(0, 90).select(
+    ops.overwritePartitioned(ja, spark.range(0, 90).select(
       col("id").as("k"),
       concat(lit("P"), (col("id") % 3).cast("string")).as("p")),
       Seq("p"), idMapped = true)
-    ops.overwritePartitioned(spark, jb, spark.range(0, 2).select(
+    ops.overwritePartitioned(jb, spark.range(0, 2).select(
       // an extra leading column shifts jb's id assignment, so p gets a
       // DIFFERENT physical id than in ja
       (col("id") * 10).as("w"),
@@ -1185,8 +1174,8 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
         .otherwise(concat(lit("P"), (col("id") % 2).cast("string"))).as("p"),
       concat(lit("Q"), (col("id") % 2).cast("string")).as("q"),
       (col("id") * 100).as("w"))
-    ops.overwritePartitioned(spark, a, rowsA, Seq("p", "q"))
-    ops.overwritePartitioned(spark, b, rowsB, Seq("p", "q"))
+    ops.overwritePartitioned(a, rowsA, Seq("p", "q"))
+    ops.overwritePartitioned(b, rowsB, Seq("p", "q"))
     def plain(jt: String) = ops.read(spark, a)
       .join(ops.read(spark, b), Seq("p", "q"), jt)
     def aligned(jt: String) = ops.joinPartitioned(spark, a, b, Seq("p", "q"), jt)
@@ -1213,7 +1202,7 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
     // prefix alignment: c partitioned by (p) only — the shared leading
     // prefix is (p); the aligned join still prunes on it
     val c = freshTable("pjo-c")
-    ops.overwritePartitioned(spark, c,
+    ops.overwritePartitioned(c,
       spark.range(0, 2).select(
         concat(lit("P"), col("id").cast("string")).as("p"),
         (col("id") * 1000).as("z")), Seq("p"))
@@ -1434,7 +1423,7 @@ abstract class VersionedTableBattery(backend: String, ops: VersionedTableOps)
 
   test(s"[$backend] add column under id mapping: drop + immediate re-add, old bytes dead") {
     val t = freshTable("addcol-id")
-    ops.overwriteIdMapped(spark, t, spark.range(0, 20).select(
+    ops.overwriteIdMapped(t, spark.range(0, 20).select(
       col("id").as("k"), (col("id") * 3).as("w")))
     ops.dropColumn(spark, t, "w")
     // id mode: the dropped name re-ADDs IMMEDIATELY (fresh id — no
